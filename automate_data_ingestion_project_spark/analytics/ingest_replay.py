@@ -10,7 +10,8 @@ hash-match them against a DuckDB oracle with no network involved:
   param pruning (P7 — the stub 500s if a falsy param reaches it),
   ordering pushdown (O4 — the stub 500s if ``ordering`` is absent),
   DRF pagination, nested-JSON flatten (S2), and cross-page column
-  drift healed by ``unionByName(allowMissingColumns=True)``.
+  drift healed by concatenating the pages' rows under the union of
+  their keys (absent keys NULL).
 - ``pipeline_etl_replay`` — the reference's whole Dagster job
   (ref ``scripts/etl.py:13-70``): YAML-shaped work-list fan-out,
   per-code failure isolation (code ``'99'`` always 500s and must NOT

@@ -13,17 +13,20 @@ Spark-first:
 - nested JSON records flatten to dot-joined columns
   (``pd.json_normalize`` semantics, extract_load.py:90-91);
 - pagination (DRF-style ``count``/``next``/``results`` envelopes) loops
-  server pages and combines per-page DataFrames with
-  ``unionByName(allowMissingColumns=True)`` so column drift across
-  pages cannot break the batch.
+  server pages; the rows of all pages are concatenated on the driver
+  under the union of their keys (first-seen order, absent keys NULL),
+  so column drift across pages cannot break the batch.
 
 The HTTP layer is INJECTABLE (``fetch=``): tests and replays substitute
 a stub; production uses the urllib default. The fetch happens on the
 driver — correct at any scale, because the API (not Spark) is the
-bottleneck; rows then distribute via ``spark.createDataFrame``. For a
-truly huge external source this becomes a Python Data Source
-(``spark.dataSource.register``) with per-partition page ranges — same
-interface, different executor placement.
+bottleneck. The rows are already on the driver, so they enter Spark as
+ONE Arrow table per code: under
+``spark.sql.execution.arrow.localRelationThreshold`` that is a JVM
+``LocalRelation``, which the stages reading it scan without a Python
+worker. For a truly huge external source this becomes a
+Python Data Source (``spark.dataSource.register``) with per-partition
+page ranges — same interface, different executor placement.
 """
 
 from __future__ import annotations
@@ -31,9 +34,9 @@ from __future__ import annotations
 import json
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
-from functools import reduce
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_BASE_URL = "https://apidf-preprod.cerema.fr/indicateurs/dv3f"
@@ -130,17 +133,24 @@ def paginate(
             if i == 0:
                 raise RestApiError(f"request succeeded but returned no rows ({endpoint})")
             return
-        flat = [flatten_record(r) for r in results]
-        # uniform keys within the page (records may omit null fields)
-        keys: list[str] = []
-        for r in flat:
-            for k in r:
-                if k not in keys:
-                    keys.append(k)
-        yield [{k: r.get(k) for k in keys} for r in flat]
+        yield [flatten_record(r) for r in results]
         if resp.payload.get("next") is None:
             return
         page += 1
+
+
+def _arrow_column(values: list) -> pa.Array:
+    """One column of JSON values as Arrow. All-NULL → void; int mixed
+    with float → double. Values Arrow cannot type together (a string
+    beside a number) become their JSON text, as Spark widens a
+    string/number union to string."""
+    try:
+        return pa.array(values)
+    except pa.ArrowException:
+        return pa.array(
+            [v if v is None or isinstance(v, str) else json.dumps(v) for v in values],
+            pa.string(),
+        )
 
 
 def read_api(
@@ -156,17 +166,19 @@ def read_api(
 ) -> DataFrame:
     """S1 — paginated REST scan → one DataFrame.
 
-    ``ordering`` is pushed to the server verbatim (O4); ``annee`` is a
-    source-side filter (the param-pushdown analog of P5).
+    The rows of every page are concatenated under the union of their
+    keys (first-seen order, absent keys NULL) and handed to Spark as one
+    Arrow table, which it plans as a JVM ``LocalRelation`` that no
+    Python worker scans. ``ordering`` is pushed to the server verbatim
+    (O4); ``annee`` is a source-side filter (the param-pushdown analog
+    of P5).
     """
     endpoint = build_endpoint(scope, code, base_url)
     params = prune_params(
         {"annee": annee, "ordering": ordering, "page": page, "page_size": page_size}
     )
-    pages = [
-        spark.createDataFrame(rows)  # type: ignore[arg-type]
-        for rows in paginate(fetch, endpoint, params)
-    ]
-    return reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), pages
+    rows = [r for recs in paginate(fetch, endpoint, params) for r in recs]
+    keys = list(dict.fromkeys(k for r in rows for k in r))
+    return spark.createDataFrame(
+        pa.table({k: _arrow_column([r.get(k) for r in rows]) for k in keys})
     )

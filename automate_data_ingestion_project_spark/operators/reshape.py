@@ -38,12 +38,18 @@ def melt(
     Value columns are cast to double first: parquet payloads mix long
     (``nbtrans``) and double (indicator) columns, and ``unpivot``
     requires one common value type — same coercion pandas applies.
+    Names are quoted, so dotted columns from nested JSON melt as-is.
     """
     value_vars = value_vars or [c for c in df.columns if c not in id_vars]
-    casted = df.select(
-        *id_vars, *[F.col(c).cast("double").alias(c) for c in value_vars]
-    )
-    return casted.unpivot(id_vars, value_vars, var_name, value_name)
+    ids = [_col(c) for c in id_vars]
+    casted = df.select(*ids, *[_col(c).cast("double").alias(c) for c in value_vars])
+    return casted.unpivot(ids, [_col(c) for c in value_vars], var_name, value_name)
+
+
+def _col(name: str) -> Column:
+    """Column by literal name: flattened JSON yields dotted names
+    (``geo.lat``) that ``F.col`` would read as struct-field access."""
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
 def split_metric_code(

@@ -83,3 +83,33 @@ def test_pipeline_all_codes_failing_writes_nothing(spark):
     assert reports[0].codes_failed and not reports[0].codes_ok
     assert reports[0].rows_upserted == 0
     assert not os.path.isdir(paths["departement"])
+
+
+class NullColumnStub(ScopedStub):
+    """Code '03' serves a second page whose metric column is NULL on
+    every row — a page type inference alone cannot type."""
+
+    def __call__(self, url, params):
+        if "/03/" not in url:
+            return super().__call__(url, params)
+        m = METRICS[0]
+        row = {"dep": "03", "libdep": "D03"}
+        pages = [
+            [{**row, "annee": "2014", f"{m}_cod111": 1.5}],
+            [{**row, "annee": "2015", f"{m}_cod111": None, f"{m}_cod121": 2.5}],
+        ]
+        page = params.get("page", 1)
+        nxt = "next-url" if page < len(pages) else None
+        return RestResponse(200, {"count": 2, "next": nxt, "results": pages[page - 1]})
+
+
+def test_pipeline_loads_code_with_all_null_column_page(spark):
+    cfg = load_pipeline_config("args:\n  scope:\n    departement: ['01', '03']\n")
+    root = scratch_dir("test_pipeline_null_column")
+    paths = {"departement": os.path.join(root, "src_departement")}
+    (report,) = run_pipeline(spark, cfg, paths, METRICS, NullColumnStub())
+    assert report.codes_ok == ["01", "03"] and not report.codes_failed
+    rows = spark.read.parquet(paths["departement"]).filter("dep = '03'").collect()
+    got = sorted((r.annee, r.cod, r[METRICS[0]]) for r in rows)
+    assert got == [("2014", "111", 1.5), ("2015", "121", 2.5)]
+    assert report.rows_upserted == 2 + 2  # code 01: 2 years × 1 cod

@@ -78,11 +78,83 @@ def test_pagination_unions_pages_with_column_drift(spark):
     df = read_api(spark, "departement", "01", annee=2014, fetch=fetcher)
     rows = sorted(df.collect(), key=lambda r: r.annee)
     assert len(rows) == 2
-    assert rows[0].extra is None  # drift handled by unionByName
+    assert rows[0].extra is None  # key absent on page 1 → NULL
     # ordering param pruned (None), annee pushed (P7/O4)
     assert all("ordering" not in p for _, p in fetcher.calls)
     assert fetcher.calls[0][1]["annee"] == 2014
     assert fetcher.calls[1][1]["page"] == 2
+
+
+def test_multi_page_scan_is_one_local_relation(spark):
+    """All pages enter Spark as ONE Arrow-backed LocalRelation: no
+    per-page Python-RDD scan (LogicalRDD) for later stages to pay for."""
+    fetcher = StubFetcher([[{"annee": str(2014 + p), "v": float(p)}] for p in range(3)])
+    df = read_api(spark, "departement", "01", fetch=fetcher)
+    plan = df._jdf.queryExecution().analyzed().toString()
+    assert "LocalRelation" in plan
+    assert "LogicalRDD" not in plan
+    assert df.count() == 3
+
+
+def test_all_null_column_on_one_page(spark):
+    """Row-wise type inference cannot type a page whose column is NULL
+    on every row (CANNOT_DETERMINE_TYPE); the code must still load."""
+    fetcher = StubFetcher(
+        [
+            [{"annee": "2014", "v": 1.0, "note": None}],
+            [{"annee": "2015", "v": None, "note": None}],
+        ]
+    )
+    df = read_api(spark, "departement", "01", fetch=fetcher)
+    rows = sorted(df.collect(), key=lambda r: r.annee)
+    assert [(r.annee, r.v, r.note) for r in rows] == [
+        ("2014", 1.0, None),
+        ("2015", None, None),
+    ]
+    assert dict(df.dtypes)["v"] == "double"
+
+
+@pytest.mark.parametrize(
+    "values, dtype, expected",
+    [
+        ([[1], [2.5]], "double", [1.0, 2.5]),
+        # the string widening a string/number unionByName applies
+        ([["s"], [2.5, None]], "string", ["s", "2.5", None]),
+    ],
+)
+def test_type_drift_across_pages_widens(spark, values, dtype, expected):
+    pages, n = [], 0
+    for page in values:
+        pages.append([{"annee": str(2014 + n + k), "v": v} for k, v in enumerate(page)])
+        n += len(page)
+    df = read_api(spark, "departement", "01", fetch=StubFetcher(pages))
+    assert dict(df.dtypes)["v"] == dtype
+    assert [r.v for r in sorted(df.collect(), key=lambda r: r.annee)] == expected
+
+
+def test_nested_record_flows_through_normalize_wide(spark):
+    """Flattened nested objects give dotted column names (``geo.lat``);
+    the melt must take them as literal names, not struct access."""
+    metric = METRICS[0]
+    fetcher = StubFetcher(
+        [
+            [
+                {
+                    "annee": "2014",
+                    "dep": "01",
+                    "libdep": "Ain",
+                    "geo": {"lat": 46.1, "lon": 5.3},
+                    f"{metric}_cod111": 7.5,
+                }
+            ]
+        ]
+    )
+    wide = read_api(spark, "departement", "01", fetch=fetcher)
+    assert {"geo.lat", "geo.lon"} <= set(wide.columns)
+    rows = normalize_wide(wide, ID_VARS, METRICS, UID_COLS).collect()
+    assert len(rows) == 1
+    row = rows[0].asDict()
+    assert (row["dep"], row["cod"], row[metric]) == ("01", "111", 7.5)
 
 
 def test_empty_first_page_raises(spark):
