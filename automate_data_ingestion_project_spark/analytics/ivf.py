@@ -313,22 +313,14 @@ def append_ivf_batch(
     batches — IVF batches are independent and ``batch_seq`` only needs
     to be unique, not ordered.
 
-    Durability protocol (the shard/near-dup ledger pattern):
-
-    - Files land under ``vectors/cell=K/batch_seq=B`` — the append-mode
-      dynamic-partition write only ADDS files under this batch's own
-      ``batch_seq=B`` leaves; earlier batches' inverted lists are
-      byte-untouched.
-    - The ledger row (batch_seq, n_vectors) is appended LAST — the
-      commit marker. A replayed committed batch is a no-op; a retry
-      after a mid-write crash first deletes the batch's own leaves
-      (self-heal), then rewrites them.
-    - An EMPTY batch commits its (batch_seq, 0) ledger row and writes
-      no vector files (a zero-row dynamic-partition write would leave a
-      schema-less store — the r11 shard-store crash class).
-
-    Store listing and self-heal deletion go through the Hadoop
-    FileSystem API, so the protocol carries to HDFS/S3A/GCS.
+    Durability is :func:`..io.maintenance.commit_batch`'s ledger
+    protocol (via :func:`..io.maintenance.append_store_batch`): files
+    land under ``vectors/cell=K/batch_seq=B`` and earlier batches'
+    inverted lists are byte-untouched; the ledger row (batch_seq,
+    n_vectors) is the commit marker, written last; a replayed committed
+    batch is a no-op, a crash retry self-heals its own leaves, and an
+    EMPTY batch commits ``(batch_seq, 0)`` without leaving a
+    schema-less store.
 
     Scale shape: assignment is one broadcast join against the codebook
     + a per-vector rank (no corpus access); the write hash-clusters by

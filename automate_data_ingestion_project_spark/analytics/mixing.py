@@ -518,182 +518,68 @@ def append_token_shard_batch(
     that same order produces the identical shard assignment — the
     equivalence the registered query's oracle checks.
 
-    Durability protocol (the neardup-index ledger pattern,
-    ``textops/neardup_index.py``):
-
-    - Files land under ``shards/shard_id=K/batch_seq=B/`` — an
-      append-mode ``partitionBy(shard_id, batch_seq)`` write only ADDS
-      files under this batch's own ``batch_seq=B`` leaves; every file
-      from earlier batches is untouched (byte-stable closed shards,
-      asserted by checksum in tests).
-    - The ledger row (batch_seq, n_docs, n_tokens) is appended LAST —
-      it is the commit marker. A replayed committed batch is a no-op;
-      a retry after a mid-write crash first deletes the batch's own
-      ``batch_seq=B`` leaves (self-heal), then rewrites them — other
-      batches' files are never candidates for cleanup.
-    - Appends are ordered: ``batch_seq`` must exceed every committed
-      one (the offset arithmetic depends on it).
-    - An EMPTY batch (crawl gap, zero-row input file) commits its
-      ``(batch_seq, 0, 0)`` ledger row and writes no shard files — the
-      sequence contract holds and the store's schema is never inferred
-      from a data-less write.
-
-    Store listing and self-heal deletion go through the Hadoop
-    FileSystem API resolved from the store path, so the protocol works
-    on HDFS/S3A/GCS as written, not only on a POSIX-local filesystem.
+    Durability is :func:`..io.maintenance.commit_batch`'s ledger
+    protocol (replay no-op, self-heal of this batch's own leaves, empty
+    batches, ledger row ``(batch_seq, n_docs, n_tokens)`` written last,
+    single writer per store). Files land under
+    ``shards/shard_id=K/batch_seq=B/``; files of earlier batches are
+    never touched (byte-stable closed shards, asserted by checksum in
+    tests). What this store adds is ORDER: ``batch_seq`` must not be
+    below any committed one, because the offset arithmetic chains
+    batches — an out-of-order batch raises ``ValueError`` before
+    anything on disk changes.
 
     Scale shape: shard assignment is :func:`assign_token_shards` (no
     corpus-sized window); the write hash-clusters by ``shard_id``
-    before ``partitionBy`` (tasks own their shards); ledger reads are
-    O(#batches) rows; self-heal listing is metadata-only.
+    before ``partitionBy`` (tasks own their shards). The ledger counts
+    are read back from the written files driver-side when they are
+    local and batch-sized (:func:`..io.maintenance.footer_column_sum`),
+    with a distributed read-back of the same files otherwise.
     """
-    if batch_seq < 0:
-        raise ValueError(
-            f"batch_seq must be >= 0 (got {batch_seq}): negative "
-            "sequences are reserved for the compacted generation — an "
-            "append into it would make its leaves self-heal candidates "
-            "and corrupt vacuum/as-of classification"
-        )
-    shards_path, ledger_path = shard_store_paths(root)
-    # store listing/cleanup goes through the Hadoop FileSystem API (not
-    # os.listdir/shutil), so the protocol carries unchanged to
-    # HDFS/S3A/GCS deployments — the filesystems a 100 TB store lives on
-    jpath = spark._jvm.org.apache.hadoop.fs.Path
-    hconf = spark._jsc.hadoopConfiguration()
-    ledger_p = jpath(ledger_path)
-    fs = ledger_p.getFileSystem(hconf)
-    start = 0
-    # ledger read/write is driver-side metadata IO (pyarrow over Hadoop
-    # streams — io/maintenance.append_ledger_row), not a Spark job: the
-    # Delta-transaction-log trade, saving the fixed per-job cost at
-    # every append's replay guard and commit marker
-    from ..io.maintenance import _ledger_rows, append_ledger_row
+    from ..io.maintenance import commit_batch, footer_column_sum
 
-    committed = _ledger_rows(spark, ledger_path)
-    if committed:
-        if any(r.batch_seq == batch_seq for r in committed):
-            return  # replay of a committed batch: no-op
-        top = max(r.batch_seq for r in committed)
+    shards_path, ledger_path = shard_store_paths(root)
+
+    def write(committed):
+        top = max((r.batch_seq for r in committed), default=0)
         if batch_seq < top:
             raise ValueError(
                 f"shard appends are ordered: batch_seq {batch_seq} <= "
                 f"committed max {top}"
             )
-        start = sum(r.n_tokens for r in committed)
-    # self-heal: a prior attempt of THIS batch that crashed before its
-    # ledger commit left orphan files under its batch_seq leaves
-    leftovers = fs.globStatus(
-        jpath(f"{shards_path}/shard_id=*/batch_seq={batch_seq}")
-    )
-    for s in leftovers or []:
-        fs.delete(s.getPath(), True)
-    from ..io.maintenance import store_exists
-
-    # No pre-write empty-batch probe (r17): the r16 form still paid an
-    # isEmpty() — a full computation of the batch input the write then
-    # recomputed — on the store's FIRST batch. The one hazard an empty
-    # batch poses (a zero-row partitionBy write into an ABSENT store
-    # leaving a schema-less shards/ dir that poisons every later
-    # read-back) is now undone POST-write: when the tree holds no
-    # parquet file at all after the write, the schema-less tree is
-    # removed (decided from the POST-write tree content, so a crash
-    # between write and cleanup heals on the retry) and the
-    # (batch_seq, 0, 0) ledger row still commits, so the ordered
-    # batch_seq contract holds and a replay is a no-op.
-    sized = docs.select(
-        "doc_id",
-        "text",
-        F.expr(ta.n_tokens("text", "spark")).alias("n_tokens"),
-    )
-    assigned = assign_token_shards(sized, "shard", budget, start=start)
-    (
-        assigned.select("doc_id", "text", "n_tokens", "shard_id")
-        .withColumn("batch_seq", F.lit(batch_seq))
-        .repartition("shard_id")
-        .sortWithinPartitions("shard_id", "doc_id")
-        .write.mode("append")
-        .partitionBy("shard_id", "batch_seq")
-        .parquet(shards_path)
-    )
-    # the self-heal delete above bypassed Spark's write path — drop any stale
-    # FileStatusCache entries before the read-back
-    spark.catalog.refreshByPath(shards_path)
-    # ledger stats come from the WRITTEN files (read-back proves the
-    # materialization). The read targets this batch's own partition
-    # leaves BY PATH (r16; was a whole-store scan pruned by filter):
-    # same files, same numbers, but the listing is O(this batch), not
-    # O(store) — at 10k epochs the store-wide partition discovery per
-    # append was the dominant metadata cost
-    leaves = [
-        s.getPath().toString()
-        for s in (
-            fs.globStatus(
-                jpath(f"{shards_path}/shard_id=*/batch_seq={batch_seq}")
-            )
-            or []
+        sized = docs.select(
+            "doc_id",
+            "text",
+            F.expr(ta.n_tokens("text", "spark")).alias("n_tokens"),
         )
-    ]
-    if leaves:
-        # driver-side read-back of the written files when they are
-        # local and batch-sized (r16; io.maintenance.footer_column_sum:
-        # row counts from the footers, ONE column's pages for the token
-        # sum) — no Spark job per commit. A large or remote batch falls
-        # back to the distributed read-back below; both read the same
-        # written files.
-        from ..io.maintenance import footer_column_sum
+        start = sum(r.n_tokens for r in committed)
+        return (
+            assign_token_shards(sized, "shard", budget, start=start)
+            .select("doc_id", "text", "n_tokens", "shard_id")
+            .withColumn("batch_seq", F.lit(batch_seq))
+            .repartition("shard_id")
+            .sortWithinPartitions("shard_id", "doc_id")
+            .write.mode("append")
+            .partitionBy("shard_id", "batch_seq")
+        )
 
-        leaf_files = [
-            s
-            for s in (
-                fs.globStatus(
-                    jpath(
-                        f"{shards_path}/shard_id=*/batch_seq={batch_seq}/*"
-                    )
-                )
-                or []
-            )
-            if s.getPath().getName().endswith(".parquet")
-        ]
-        stats = footer_column_sum(spark, fs, leaf_files, "n_tokens")
-        if stats is not None:
-            n_docs, n_tokens = stats
-        else:
-            written = (
+    def stats(fs, files):
+        got = footer_column_sum(spark, fs, files, "n_tokens")
+        if got is None:
+            r = (
                 spark.read.option("basePath", shards_path)
-                .parquet(*leaves)
+                .parquet(*[s.getPath().toString() for s in files])
                 .agg(
                     F.count("*").alias("n_docs"),
-                    F.coalesce(F.sum("n_tokens"), F.lit(0)).alias(
-                        "n_tokens"
-                    ),
+                    F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("n_tokens"),
                 )
                 .first()
             )
-            n_docs, n_tokens = written.n_docs, written.n_tokens
-    else:  # empty batch: the write added no files
-        n_docs, n_tokens = 0, 0
-        any_parquet = [
-            s
-            for s in (
-                fs.globStatus(
-                    jpath(f"{shards_path}/shard_id=*/batch_seq=*/*")
-                )
-                or []
-            )
-            if s.getPath().getName().endswith(".parquet")
-        ]
-        if not any_parquet and store_exists(spark, shards_path):
-            # the tree holds no data at all: drop the schema-less tree
-            # so the store stays ABSENT until its first real batch
-            fs.delete(jpath(shards_path), True)
-            spark.catalog.refreshByPath(shards_path)
-    # commit marker LAST: a ledger row implies the batch's files are
-    # all in place (see the durability protocol above)
-    append_ledger_row(
-        spark,
-        ledger_path,
-        batch_seq,
-        {"n_docs": n_docs, "n_tokens": n_tokens},
+            got = (r.n_docs, r.n_tokens)
+        return {"n_docs": got[0], "n_tokens": got[1]}
+
+    commit_batch(
+        spark, shards_path, ledger_path, batch_seq, "shard_id=*/", write, stats
     )
 
 

@@ -100,11 +100,10 @@ TOMBSTONE_BROADCAST_MAX_IDS = 4_000_000
 # changes AQE sizing for every later query. The scope below serializes
 # the mutation under a module lock and REFCOUNTS nesting per (session,
 # key): the first scope in records the true prior, the last one out
-# restores it. Concurrent scopes are expected to request the SAME value
-# (both compactions pass the same target_bytes); if they ever differ,
-# the last set wins for the overlap and the true prior is still
-# restored at the end — acceptable for a sizing advisory, never for a
-# semantics-bearing conf.
+# restores it. Overlapping scopes must request the SAME value (both
+# compactions pass the same target_bytes): a scope opened on a key
+# already scoped to a DIFFERENT value raises ValueError instead of
+# letting the last set silently win for the overlap.
 _CONF_SCOPE_LOCK = threading.Lock()
 _CONF_SCOPE_STATE: dict[tuple[int, str], list] = {}
 
@@ -112,14 +111,20 @@ _CONF_SCOPE_STATE: dict[tuple[int, str], list] = {}
 @contextmanager
 def session_conf_scope(spark: SparkSession, key: str, value):
     sk = (id(spark), key)
+    value = str(value)
     with _CONF_SCOPE_LOCK:
         st = _CONF_SCOPE_STATE.get(sk)
         if st is None:
-            # [true prior (None = was unset), refcount]
-            st = [spark.conf.get(key, None), 0]
+            # [true prior (None = was unset), refcount, scoped value]
+            st = [spark.conf.get(key, None), 0, value]
             _CONF_SCOPE_STATE[sk] = st
+            spark.conf.set(key, value)
+        elif st[2] != value:
+            raise ValueError(
+                f"session_conf_scope: {key} is already scoped to {st[2]!r}"
+                f" by an open scope; refusing to override it with {value!r}"
+            )
         st[1] += 1
-        spark.conf.set(key, str(value))
     try:
         yield
     finally:
@@ -1589,6 +1594,112 @@ def compact_flat_tree(
     return n_files
 
 
+def commit_batch(
+    spark: SparkSession,
+    data_path: str,
+    ledger_path: str,
+    batch_seq: int,
+    leaf_prefix: str,
+    write,
+    stats,
+) -> None:
+    """The ledger-append protocol, defined once for every maintained
+    store: the IVF/IVF-PQ stores (:func:`append_store_batch`), the
+    tombstone masks (:func:`append_tombstones`) and the ordered
+    token-shard store (``analytics.mixing.append_token_shard_batch``).
+    A batch's rows land under its own ``{leaf_prefix}batch_seq=B``
+    leaves of ``data_path`` (``leaf_prefix`` is ``"cell=*/"``,
+    ``"shard_id=*/"`` or ``""``), and the ledger row is the commit
+    marker, written LAST. The steps:
+
+    1. ``batch_seq < 0`` is rejected: ``-1`` is the compacted
+       generation, and an append into it would make its leaves
+       self-heal candidates and corrupt vacuum/as-of classification.
+    2. The ledger is read once, driver-side. A committed ``batch_seq``
+       is a replay and a no-op.
+    3. ``write(committed_rows)`` returns the batch's configured
+       ``DataFrameWriter``. Building it is lazy (no job, no file), so a
+       caller whose batches chain — the token-shard offsets — derives
+       its start offset from ``committed_rows`` and rejects an
+       out-of-order batch here, before anything on disk changes.
+    4. Self-heal: this batch's own leaves, left by an attempt that
+       crashed before its ledger commit, are deleted. Other batches'
+       files are never candidates.
+    5. The writer saves into ``data_path``, then the path is refreshed
+       (the self-heal delete bypassed Spark's write path).
+    6. ``stats(fs, files)`` turns this batch's written parquet files,
+       listed by one glob, into the ledger counts. The counts come from
+       the WRITTEN files, driver-side from their footers where
+       possible (r16) — the same source of truth a read-back job would
+       scan, without a Spark job per commit, and O(this batch's files),
+       not O(store).
+    7. Empty batches are handled after the write, from the tree itself:
+       a zero-row dynamic-partition write into an ABSENT store leaves a
+       schema-less tree (root + ``_SUCCESS``, no leaves) that poisons
+       every later read, so when this batch wrote no parquet file and
+       the whole tree holds none, the tree is removed and the store
+       stays canonically absent. Deciding from the post-write tree, not
+       a pre-write flag, lets a crash between the write and this
+       cleanup heal on the retry. It replaces (r17) a pre-write
+       ``isEmpty()`` probe, which computed the batch derivation once
+       just for the write to recompute it.
+    8. The ledger row is appended.
+
+    Racing appenders on the SAME ``batch_seq`` (a retried job whose
+    predecessor is still alive, two schedulers double-firing an epoch):
+    FIRST LEDGER COMMIT WINS. A later attempt of a committed sequence
+    no-ops at the guard; an attempt interleaving with an uncommitted one
+    self-heals the other's partial leaves and lands its own rows, and
+    whichever reaches the ledger first becomes the committed content —
+    pinned by ``tests/test_properties.py``.
+
+    SINGLE WRITER PER STORE: step 7 deletes the whole ``data_path``
+    after a glob finds no parquet file in it, so a concurrent appender
+    of ANOTHER sequence into the same still-empty store can lose its
+    in-flight output to that delete. Run one appender per store at a
+    time; appends to different stores are independent.
+
+    ``append_ledger_row``, ``store_exists`` and ``_fs`` are looked up
+    through this module's globals, so crash injection and tracing can
+    patch them here. All filesystem work goes through the Hadoop
+    FileSystem API, so the protocol carries to HDFS/S3A/GCS as written.
+    """
+    if batch_seq < 0:
+        raise ValueError(
+            f"batch_seq must be >= 0 (got {batch_seq}): negative "
+            "sequences are reserved for the compacted generation"
+        )
+    committed = _ledger_rows(spark, ledger_path) or []
+    if any(r.batch_seq == batch_seq for r in committed):
+        return  # replay of a committed batch: no-op
+    writer = write(committed)
+    fs, jpath = _fs(spark, data_path)
+
+    def parquet_files(pattern):
+        found = fs.globStatus(jpath(f"{data_path}/{leaf_prefix}{pattern}"))
+        return [
+            s for s in found or [] if s.getPath().getName().endswith(".parquet")
+        ]
+
+    leftovers = fs.globStatus(
+        jpath(f"{data_path}/{leaf_prefix}batch_seq={batch_seq}")
+    )
+    for s in leftovers or []:
+        fs.delete(s.getPath(), True)
+    writer.parquet(data_path)
+    spark.catalog.refreshByPath(data_path)
+    files = parquet_files(f"batch_seq={batch_seq}/*")
+    counts = stats(fs, files)
+    if (
+        not files
+        and not parquet_files("batch_seq=*/*")
+        and store_exists(spark, data_path)
+    ):
+        fs.delete(jpath(data_path), True)
+        spark.catalog.refreshByPath(data_path)
+    append_ledger_row(spark, ledger_path, batch_seq, counts)
+
+
 def append_store_batch(
     spark: SparkSession,
     data_path: str,
@@ -1599,106 +1710,30 @@ def append_store_batch(
     sort_col: str,
     count_col: str = "n_rows",
 ) -> None:
-    """The UNORDERED ledger-append protocol, generically: append
-    ``rows`` (already derived; no ``batch_seq`` column) under
-    ``data_path``'s ``{key_col}=K/batch_seq={batch_seq}`` leaves with
-    the ledger row as the commit marker. Shared by every maintained
-    store whose batches are independent (IVF cells, IVF-PQ codes —
-    any store whose row derivation is a pure function of a frozen
-    artifact); the token-shard store keeps its own ordered variant
-    because its offset arithmetic chains batches.
-
-    Protocol legs (same as ``mixing.append_token_shard_batch``):
-    replayed committed batch → no-op; crash retry → self-heal of this
-    batch's own leaves only; empty batch → ``(batch_seq, 0)`` ledger
-    row, no data write (a zero-row dynamic-partition write leaves a
-    schema-less tree); ledger row written LAST from the read-back of
-    the written files. All filesystem ops via the Hadoop FileSystem
-    API. Negative sequences are rejected — ``batch_seq = -1`` is the
-    compacted generation, and an append into it would make its leaves
-    self-heal candidates and corrupt vacuum/as-of classification.
-
-    Racing appenders on the SAME batch_seq (a retried job whose
-    predecessor is still alive, two schedulers double-firing an epoch):
-    the protocol's contract is FIRST LEDGER COMMIT WINS. A later
-    attempt of a committed sequence no-ops at the guard; an attempt
-    interleaving with an uncommitted one self-heals the other's
-    partial leaves and lands its own rows, and whichever reaches the
-    ledger first becomes the committed content — pinned by
-    ``tests/test_properties.py``. Appenders on DIFFERENT sequences
-    are independent by construction (each owns its own leaves).
+    """Append ``rows`` (already derived; no ``batch_seq`` column) under
+    ``data_path``'s ``{key_col}=K/batch_seq={batch_seq}`` leaves, with
+    ledger counts ``{count_col: rows written}``. For every maintained
+    store whose batches are independent (IVF cells, IVF-PQ codes — any
+    store whose row derivation is a pure function of a frozen
+    artifact). The protocol — replay guard, self-heal, empty batches,
+    first-ledger-commit-wins and the single-writer-per-store
+    requirement — is :func:`commit_batch`'s.
     """
-    if batch_seq < 0:
-        raise ValueError(
-            f"batch_seq must be >= 0 (got {batch_seq}): negative "
-            "sequences are reserved for the compacted generation"
-        )
-    fs, jpath = _fs(spark, data_path)
-    committed = _ledger_rows(spark, ledger_path)
-    if committed and any(r.batch_seq == batch_seq for r in committed):
-        return  # replay of a committed batch: no-op
-    leftovers = fs.globStatus(
-        jpath(f"{data_path}/{key_col}=*/batch_seq={batch_seq}")
+    commit_batch(
+        spark,
+        data_path,
+        ledger_path,
+        batch_seq,
+        f"{key_col}=*/",
+        lambda committed: (
+            rows.withColumn("batch_seq", F.lit(batch_seq))
+            .repartition(key_col)
+            .sortWithinPartitions(key_col, sort_col)
+            .write.mode("append")
+            .partitionBy(key_col, "batch_seq")
+        ),
+        lambda fs, files: {count_col: _footer_row_counts(spark, fs, files)},
     )
-    for s in leftovers or []:
-        fs.delete(s.getPath(), True)
-    # Empty-batch handling is POST-write (r17): the one hazard of a
-    # zero-row dynamic-partition write is that into an ABSENT store it
-    # leaves a schema-less tree (root dir + _SUCCESS, no partition
-    # leaves) that poisons every later read — so when the footer
-    # read-back of the written leaves comes back 0 AND the whole tree
-    # holds no parquet file at all, the schema-less tree is removed
-    # and the store stays canonically ABSENT. The decision reads the
-    # POST-write tree (not a pre-write existence flag) so a crash
-    # between a zero-row write and its cleanup heals on the retry.
-    # This replaces the pre-write isEmpty() probe (r16 paid it on the
-    # store's FIRST batch), which computed the whole batch derivation
-    # once just for the write to recompute it — one whole Spark job
-    # per store bootstrap, pure fixed cost.
-    (
-        rows.withColumn("batch_seq", F.lit(batch_seq))
-        .repartition(key_col)
-        .sortWithinPartitions(key_col, sort_col)
-        .write.mode("append")
-        .partitionBy(key_col, "batch_seq")
-        .parquet(data_path)
-    )
-    # the self-heal delete bypassed Spark's write path — invalidate any
-    # stale FileStatusCache entries before later reads
-    spark.catalog.refreshByPath(data_path)
-    # ledger count from the WRITTEN files' parquet footers, driver-side
-    # (r16): exactly what the old whole-store-scan-plus-filter read-back
-    # job counted, without a Spark job per append — and O(this batch's
-    # files), not O(store listing), at scale. ONE multi-level glob
-    # lists every leaf file of this batch in a single round trip.
-    statuses = [
-        s
-        for s in (
-            fs.globStatus(
-                jpath(f"{data_path}/{key_col}=*/batch_seq={batch_seq}/*")
-            )
-            or []
-        )
-        if s.getPath().getName().endswith(".parquet")
-    ]
-    n = _footer_row_counts(spark, fs, statuses)
-    if n == 0:
-        any_parquet = [
-            s
-            for s in (
-                fs.globStatus(jpath(f"{data_path}/{key_col}=*/batch_seq=*/*"))
-                or []
-            )
-            if s.getPath().getName().endswith(".parquet")
-        ]
-        if not any_parquet and store_exists(spark, data_path):
-            # zero-row batch on a store with NO data at all: remove the
-            # schema-less tree the write created so the store stays
-            # ABSENT (the state every reader and the next append's
-            # protocol legs expect for "no data yet")
-            fs.delete(jpath(data_path), True)
-            spark.catalog.refreshByPath(data_path)
-    append_ledger_row(spark, ledger_path, batch_seq, {count_col: n})
 
 
 def tombstone_paths(root: str) -> tuple[str, str]:
@@ -1722,12 +1757,12 @@ def append_tombstones(
     id_col: str,
 ) -> None:
     """Record a deletion batch (takedown / right-to-erasure) for a
-    maintained store, under the SAME ledger protocol as the data
-    appends: the ids land under the batch's own ``batch_seq=B`` leaf,
-    the ledger row is the commit marker written LAST, a replayed
-    committed batch no-ops, and a crash retry self-heals only its own
-    leaf. Tombstone batches are unordered and independent — deletion
-    is a set union.
+    maintained store under :func:`commit_batch`'s ledger protocol (see
+    there for replay, self-heal, empty batches and the
+    single-writer-per-store requirement): the distinct ids land under
+    the batch's own ``batch_seq=B`` leaf, with ledger counts
+    ``{"n_ids": n}``. Tombstone batches are unordered and independent —
+    deletion is a set union.
 
     Readers apply the mask logically (:func:`read_committed` with
     ``tombstones_path``: a broadcast anti-join, the corpus is never
@@ -1735,69 +1770,22 @@ def append_tombstones(
     physically and drops the tombstone files — Delta's
     DELETE-then-VACUUM lifecycle on the ledger protocol.
     """
-    if batch_seq < 0:
-        raise ValueError(
-            f"batch_seq must be >= 0 (got {batch_seq}): negative "
-            "sequences are reserved for the compacted generation"
-        )
-    fs, jpath = _fs(spark, tombstones_path)
-    committed = _ledger_rows(spark, tombstone_ledger_path)
-    if committed and any(r.batch_seq == batch_seq for r in committed):
-        return  # replay of a committed tombstone batch: no-op
-    leftover = jpath(f"{tombstones_path}/batch_seq={batch_seq}")
-    if fs.exists(leftover):
-        fs.delete(leftover, True)
-    # No pre-write isEmpty() probe (r17): it cost one Spark job per
-    # tombstone commit computing the takedown-id derivation the write
-    # then recomputed. The zero-row case is derived from the written
-    # footers below instead; the only hazard — a zero-row write into an
-    # ABSENT store leaving a schema-less tree — is undone post-write
-    # (from the post-write tree content, so a crash between write and
-    # cleanup heals on the retry).
-    (
-        ids.select(id_col)
-        .distinct()
-        .withColumn("batch_seq", F.lit(batch_seq))
-        .coalesce(1)  # takedown sets are small by nature
-        .write.mode("append")
-        .partitionBy("batch_seq")
-        .parquet(tombstones_path)
-    )
-    spark.catalog.refreshByPath(tombstones_path)
-    # ledger stats from the WRITTEN files' parquet footers, driver-side
-    # (r16): the exact count the old read-back job produced, without a
-    # Spark job per tombstone commit — only this batch's own leaf is
-    # touched, metadata-only (see _footer_row_counts)
-    n = _footer_row_counts(
+    commit_batch(
         spark,
-        fs,
-        [
-            s
-            for s in (
-                fs.globStatus(
-                    jpath(f"{tombstones_path}/batch_seq={batch_seq}/*")
-                )
-                or []
-            )
-            if s.getPath().getName().endswith(".parquet")
-        ],
+        tombstones_path,
+        tombstone_ledger_path,
+        batch_seq,
+        "",
+        lambda committed: (
+            ids.select(id_col)
+            .distinct()
+            .withColumn("batch_seq", F.lit(batch_seq))
+            .coalesce(1)  # takedown sets are small by nature
+            .write.mode("append")
+            .partitionBy("batch_seq")
+        ),
+        lambda fs, files: {"n_ids": _footer_row_counts(spark, fs, files)},
     )
-    if n == 0:
-        any_parquet = [
-            s
-            for s in (
-                fs.globStatus(jpath(f"{tombstones_path}/batch_seq=*/*"))
-                or []
-            )
-            if s.getPath().getName().endswith(".parquet")
-        ]
-        if not any_parquet and store_exists(spark, tombstones_path):
-            # zero-row batch on a mask tree with NO data at all: drop
-            # the schema-less tree — an absent tombstone store is the
-            # canonical "no deletions" state every masked read checks
-            fs.delete(jpath(tombstones_path), True)
-            spark.catalog.refreshByPath(tombstones_path)
-    append_ledger_row(spark, tombstone_ledger_path, batch_seq, {"n_ids": n})
 
 
 def compact_bucketed_table(

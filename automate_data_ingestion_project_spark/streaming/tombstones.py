@@ -38,7 +38,7 @@ Residual exposure, stated honestly: a direct appender auto-sequencing
 in the instant between an epoch's marker write and its ledger commit
 can still take the same sequence (both computed ``max+1`` from the
 same committed set) — the generic "first ledger commit wins" race that
-:func:`..io.maintenance.append_store_batch` documents for ALL
+:func:`..io.maintenance.commit_batch` documents for ALL
 same-sequence writers. The window is the single synchronous append
 inside one epoch, not the unbounded between-drains gap the fixed base
 had; callers that run direct takedowns concurrently with an ACTIVE

@@ -85,6 +85,7 @@ def main() -> int:
     for attr in (
         "_ledger_rows",
         "append_ledger_row",
+        "commit_batch",
         "committed_batch_seqs",
         "read_committed",
         "_apply_tombstone_mask",

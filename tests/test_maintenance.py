@@ -1147,6 +1147,27 @@ def test_session_conf_scope_interleaved_threads_restore_prior(spark):
     assert spark.conf.get(key, None) is None
 
 
+def test_session_conf_scope_rejects_divergent_value(spark):
+    """Overlapping scopes on one key must agree on the value: a scope
+    opened over an open scope with a DIFFERENT value raises instead of
+    silently overriding it, and leaves the open scope's value and the
+    true prior intact. An equal value nests."""
+    from automate_data_ingestion_project_spark.io.maintenance import (
+        session_conf_scope,
+    )
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    assert spark.conf.get(key, None) is None
+    with session_conf_scope(spark, key, 111 << 20):
+        with session_conf_scope(spark, key, 111 << 20):
+            assert spark.conf.get(key) == str(111 << 20)
+        with pytest.raises(ValueError, match="already scoped"):
+            with session_conf_scope(spark, key, 222 << 20):
+                pass  # pragma: no cover
+        assert spark.conf.get(key) == str(111 << 20)
+    assert spark.conf.get(key, None) is None
+
+
 def test_concurrent_masked_compactions_restore_session_conf(spark, tmp_path):
     """End-to-end form of the same regression: NearDupIndex.compact-style
     CONCURRENT masked compact_flat_tree calls (each sets the AQE
@@ -1270,3 +1291,61 @@ def test_append_tombstones_empty_first_batch_leaves_store_absent(
     append_tombstones(spark, t_data, t_ledger, dead, 1, "vid")
     assert store_exists(spark, t_data)
     assert {r.vid for r in spark.read.parquet(t_data).collect()} == {7}
+
+
+def test_append_job_counts_pinned(spark, tmp_path, sf_dir):
+    """Every appender submits a fixed number of Spark jobs: the batch
+    write's own jobs and nothing else (the replay guard, the ledger
+    commit and the footer-derived counts are driver-side metadata IO).
+    Pinned for an empty FIRST batch and a non-empty batch of each store,
+    so a pre-write isEmpty()/count() probe or a read-back job re-added
+    to any one of them fails here."""
+    import os
+
+    from automate_data_ingestion_project_spark.analytics.mixing import (
+        append_token_shard_batch,
+    )
+    from automate_data_ingestion_project_spark.io import load_table
+
+    sc = spark.sparkContext
+    docs = load_table(spark, sf_dir, "documents")
+    root = str(tmp_path)
+    data, ledger = os.path.join(root, "ivf"), os.path.join(root, "ivf_ledger")
+    t_data, t_ledger = tombstone_paths(os.path.join(root, "t"))
+    shards = os.path.join(root, "shards")
+
+    def ids(lo, hi):
+        return spark.range(lo, hi).select(F.col("id").alias("vid"))
+
+    def jobs(tag, append):
+        sc.setJobGroup(tag, tag)
+        try:
+            append()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    tag = f"append-jobs-{id(tmp_path)}"
+    got = {
+        "ivf_empty": jobs(f"{tag}-0", lambda: append_store_batch(
+            spark, data, ledger, _mk_rows(spark, 0, 0), 0, "cell", "vid")),
+        "ivf": jobs(f"{tag}-1", lambda: append_store_batch(
+            spark, data, ledger, _mk_rows(spark, 0, 30), 1, "cell", "vid")),
+        "tombstones_empty": jobs(f"{tag}-2", lambda: append_tombstones(
+            spark, t_data, t_ledger, ids(0, 0), 0, "vid")),
+        "tombstones": jobs(f"{tag}-3", lambda: append_tombstones(
+            spark, t_data, t_ledger, ids(0, 10), 1, "vid")),
+        "shards_empty": jobs(f"{tag}-4", lambda: append_token_shard_batch(
+            spark, docs.filter("false"), shards, 0)),
+        "shards": jobs(f"{tag}-5", lambda: append_token_shard_batch(
+            spark, docs.filter("doc_id % 3 = 1"), shards, 1)),
+    }
+    assert got == {
+        "ivf_empty": 1,
+        "ivf": 2,
+        "tombstones_empty": 1,
+        "tombstones": 1,
+        "shards_empty": 1,
+        "shards": 6,
+    }

@@ -363,7 +363,7 @@ def test_incremental_shard_append_is_byte_stable(spark, tmp_path):
 
 def test_incremental_shard_append_replay_and_order_guard(spark, tmp_path):
     """A replayed committed batch is a no-op (ledger = commit marker);
-    an out-of-order append raises."""
+    an out-of-order append raises before touching the store."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -377,17 +377,36 @@ def test_incremental_shard_append_replay_and_order_guard(spark, tmp_path):
     root = str(tmp_path / "store")
     append_token_shard_batch(spark, docs.filter("doc_id % 3 = 1"), root, 0)
     append_token_shard_batch(spark, docs.filter("doc_id % 3 = 2"), root, 2)
-    shards_path, _ = shard_store_paths(root)
+    shards_path, ledger_path = shard_store_paths(root)
     before = _file_md5s(shards_path)
     # replay of committed batch 0: nothing changes, nothing is deleted
     append_token_shard_batch(spark, docs.filter("doc_id % 3 = 1"), root, 0)
     assert _file_md5s(shards_path) == before
+    # an orphan leaf of the rejected seq (a crashed earlier attempt):
+    # the order check must fire before the self-heal would delete it
+    import os
+    import shutil
+
+    from automate_data_ingestion_project_spark.io.maintenance import (
+        committed_batch_seqs,
+    )
+
+    src = next(p for p in before if "batch_seq=0" in p)
+    orphan = src.replace("batch_seq=0", "batch_seq=1")
+    os.makedirs(os.path.dirname(os.path.join(shards_path, orphan)))
+    shutil.copy(
+        os.path.join(shards_path, src), os.path.join(shards_path, orphan)
+    )
+    before = _file_md5s(shards_path)
+    seqs = committed_batch_seqs(spark, ledger_path)
     # an UNCOMMITTED seq below the committed max: the offset arithmetic
-    # would be wrong — must raise
+    # would be wrong — must raise, before any filesystem mutation
     with pytest.raises(ValueError, match="ordered"):
         append_token_shard_batch(
             spark, docs.filter("doc_id % 3 = 0"), root, 1
         )
+    assert _file_md5s(shards_path) == before
+    assert committed_batch_seqs(spark, ledger_path) == seqs == {0, 2}
 
 
 def test_incremental_shard_append_crash_retry_self_heals(
@@ -494,6 +513,37 @@ def test_incremental_shard_append_empty_batches(spark, tmp_path):
         for r in spark.read.parquet(shards_path).collect()
     }
     assert got == {1: 0, 2: 0, 3: 1}
+
+
+def test_incremental_shard_append_distributed_readback_matches_footers(
+    spark, tmp_path, monkeypatch
+):
+    """A large or remote batch takes the distributed read-back of its
+    written files instead of the driver-side footer read; both must
+    commit the same ledger counts."""
+    import automate_data_ingestion_project_spark.io.maintenance as maint
+    from automate_data_ingestion_project_spark.analytics.mixing import (
+        append_token_shard_batch,
+        shard_store_paths,
+    )
+    from automate_data_ingestion_project_spark.io import load_table
+
+    docs = load_table(spark, SF_DIR, "documents")
+
+    def ledger_after_two_batches(root):
+        append_token_shard_batch(spark, docs.filter("doc_id % 3 = 0"), root, 0)
+        append_token_shard_batch(spark, docs.filter("doc_id % 3 != 0"), root, 1)
+        _, ledger_path = shard_store_paths(root)
+        return sorted(
+            (r.batch_seq, r.n_docs, r.n_tokens)
+            for r in spark.read.parquet(ledger_path).collect()
+        )
+
+    footers = ledger_after_two_batches(str(tmp_path / "footers"))
+    monkeypatch.setattr(maint, "footer_column_sum", lambda *a, **k: None)
+    readback = ledger_after_two_batches(str(tmp_path / "readback"))
+    assert readback == footers
+    assert [n_docs > 0 for _, n_docs, _ in readback] == [True, True]
 
 
 def test_scrambled_cum_tokens_plan_shape(spark):
