@@ -83,7 +83,7 @@ _SMOKE_SF_DIR = "/root/testdata/sf0.001"
 # isEmpty probes removed from append_store_batch / append_tombstones
 # / append_token_shard_batch, the 3-way concurrent index compaction,
 # session_conf_scope in the masked rewrites, thread-aware
-# persist_scope, tombstone legacy-replay-after-erasure recognition).
+# persist_scope).
 # Every one of these ran green in this round's changed-since oracle
 # drives plus a FULL 203-query drive; this window turns that local
 # evidence into driver evidence. 38 + 12 = 50 fills the window.

@@ -687,10 +687,7 @@ def corpus_neardup_index(spark: SparkSession, sf_dir: str):
 
     # the artifact name carries the index LAYOUT version (the content
     # fingerprint only tracks fixture regeneration): v2 = bands +
-    # shingles + the content-hash roster the collision guard's primary
-    # path needs. Bumping the name makes current code rebuild rather
-    # than serve a pre-roster tree and silently run the guard's
-    # resolution-limited legacy fallback forever.
+    # shingles + the content-hash roster every index carries.
     root = fixture_artifact(sf_dir, "neardup_index_v2", ("documents",), _build)
     return NearDupIndex(spark, root)
 
@@ -856,16 +853,10 @@ def _clone_replay_index(spark: SparkSession, sf_dir: str, name: str):
         except OSError:  # cross-device scratch root → degrade to a copy
             shutil.copy2(s, d)
 
-    shutil.copytree(
-        src.bands_path, os.path.join(root, BANDS_SUBDIR), copy_function=_link_or_copy
-    )
-    shutil.copytree(
-        src.rows_path, os.path.join(root, ROWS_SUBDIR), copy_function=_link_or_copy
-    )
-    if src.has_hashes():  # keep the roster invariant: exists ⟺ complete
+    for sub in (BANDS_SUBDIR, ROWS_SUBDIR, HASHES_SUBDIR):
         shutil.copytree(
-            src.hashes_path,
-            os.path.join(root, HASHES_SUBDIR),
+            os.path.join(src.root, sub),
+            os.path.join(root, sub),
             copy_function=_link_or_copy,
         )
     # the copy happened outside Spark's write path, so the session's

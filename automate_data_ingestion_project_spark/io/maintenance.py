@@ -151,6 +151,34 @@ def store_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jpath(path)))
 
 
+def _read_small_text(spark: SparkSession, path: str) -> str | None:
+    """A few-byte marker file's stripped text, or None if it is absent.
+    Hadoop's FSDataInputStream is awkward byte-at-a-time from py4j; the
+    commons-io whole-stream utility (bundled with Hadoop) reads it in
+    one call."""
+    fs, jpath = _fs(spark, path)
+    p = jpath(path)
+    if not fs.exists(p):
+        return None
+    stream = fs.open(p)
+    try:
+        return spark._jvm.org.apache.commons.io.IOUtils.toString(
+            stream, "UTF-8"
+        ).strip()
+    finally:
+        stream.close()
+
+
+def _write_small_text(spark: SparkSession, path: str, text: str) -> None:
+    """Create (or overwrite) a marker file holding ``text``."""
+    fs, jpath = _fs(spark, path)
+    out = fs.create(jpath(path), True)
+    try:
+        out.write(text.encode("utf-8"))
+    finally:
+        out.close()
+
+
 def invalidate_swapped_path(spark: SparkSession, path: str) -> None:
     """Invalidate Spark state over a path whose files were just swapped
     or deleted OUTSIDE Spark's write path (the compaction renames, the
@@ -319,10 +347,10 @@ def _ledger_rows(spark: SparkSession, ledger_path: str):
     commit_files, ckpt_files = [], []
     for s in fs.listStatus(p):
         n = s.getPath().getName()
-        # skip zero-length files: ledgers written before the
-        # temp-then-rename commit (r14) could be left truncated by a
-        # crash mid-write; an empty husk carries no committed row and
-        # must not poison every later replay guard / read / vacuum
+        # skip zero-length files: Hadoop's local FS does not fsync
+        # before rename, so a crash can still leave a zero-length
+        # commit file; an empty husk carries no committed row and must
+        # not poison every later replay guard / read / vacuum
         if not n.endswith(".parquet") or s.getLen() == 0:
             continue
         if n.startswith(_LEDGER_CHECKPOINT_PREFIX):
@@ -440,11 +468,9 @@ def append_ledger_row(
     (pyarrow serializes the row in memory; no Spark job). The ledger is
     metadata — one row per batch — so scheduling a cluster write job
     for it was pure fixed overhead; Delta's transaction log makes the
-    same driver-side choice. Schema matches the historical Spark-
-    written files (batch_seq int32, counts int64), so old and new
-    commit files coexist in one ledger directory and every reader sees
-    one table. The unique filename keeps concurrent writers from
-    clobbering each other; the one-row-per-file invariant is what dates
+    same driver-side choice. Schema: batch_seq int32, counts int64.
+    The unique filename keeps concurrent writers from clobbering each
+    other; the one-row-per-file invariant is what dates
     each live commit for :func:`assert_ordered_commits` (a
     :func:`checkpoint_ledger` fold preserves each row's mtime, so the
     dating survives checkpointing)."""
@@ -575,30 +601,12 @@ def _apply_tombstone_mask(
 
 def _read_watermark(spark: SparkSession, live_path: str) -> int | None:
     """The compaction watermark recorded inside the tree, or None if
-    the store was never compacted by the watermark-aware path."""
-    fs, jpath = _fs(spark, live_path)
-    p = jpath(f"{live_path}/{_WATERMARK_NAME}")
-    if not fs.exists(p):
-        return None
-    # Hadoop's FSDataInputStream is awkward byte-at-a-time from py4j;
-    # the commons-io whole-stream utility (bundled with Hadoop) reads
-    # the few-byte marker in one call.
-    util = spark._jvm.org.apache.commons.io.IOUtils
-    stream = fs.open(p)
-    try:
-        txt = util.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return int(txt.strip())
-
-
-def _write_watermark(spark: SparkSession, tmp_path: str, value: int) -> None:
-    fs, jpath = _fs(spark, tmp_path)
-    out = fs.create(jpath(f"{tmp_path}/{_WATERMARK_NAME}"), True)
-    try:
-        out.write(str(value).encode("utf-8"))
-    finally:
-        out.close()
+    the store was never compacted. :func:`compact_store_tree` is the
+    only writer of the compacted generation and swaps the watermark in
+    with it, so a tree holding ``batch_seq=-1`` always holds a
+    watermark."""
+    txt = _read_small_text(spark, f"{live_path}/{_WATERMARK_NAME}")
+    return None if txt is None else int(txt)
 
 
 def _checked_swap(fs, live, old, tmp, reconcile=None) -> None:
@@ -643,6 +651,35 @@ def _swap_recovery(fs, live, old, tmp) -> None:
         fs.delete(tmp, True)  # stale build, never swapped in
     if fs.exists(old):
         fs.delete(old, True)  # crashed after the swap, before cleanup
+
+
+def _rescue_missed_leaves(
+    fs, jpath, live_path: str, missed: set[int], step: str
+) -> bool:
+    """Move the ``batch_seq`` leaves of the ``missed`` committed
+    generations from the displaced ``{live_path}.old`` tree into the
+    live tree — per-leaf renames, same-filesystem metadata ops. Hadoop
+    ``rename`` reports failure by returning false, so a failed move
+    raises (naming ``step``) before the old copy can be deleted.
+    Returns whether any leaf moved."""
+    if not missed:
+        return False
+    moved = False
+    for s in fs.globStatus(jpath(f"{live_path}.old/*/batch_seq=*")) or []:
+        seq = int(s.getPath().getName().split("=", 1)[1])
+        if seq not in missed:
+            continue
+        leaf = s.getPath()
+        key_name = leaf.getParent().getName()
+        fs.mkdirs(jpath(f"{live_path}/{key_name}"))
+        dest = jpath(f"{live_path}/{key_name}/{leaf.getName()}")
+        if not fs.rename(leaf, dest):
+            raise IOError(
+                f"{step} failed: committed generation {seq} leaf {leaf} "
+                f"could not be moved into {dest}"
+            )
+        moved = True
+    return moved
 
 
 def compact_store_tree(
@@ -724,51 +761,23 @@ def compact_store_tree(
         # generations all sit at or below the watermark). Below-or-at
         # watermark seqs are never rescued here — they are the folded
         # history, and re-moving them would duplicate rows. A live tree
-        # with NO watermark splits two ways: no compacted generation at
-        # all means NOTHING was folded (every committed seq must be
-        # physically present, so any committed seq found only in .old
-        # is a displaced window batch — rescue it); a compacted
-        # generation without a watermark is a LEGACY fold whose history
-        # is unknowable, and deleting .old could destroy a committed
-        # window batch indistinguishable from folded history — refuse
-        # and surface rather than silently drop committed data.
+        # with NO watermark was never compacted, so nothing was folded:
+        # every committed seq must be physically present, and any
+        # committed seq found only in .old is a displaced window batch.
         wm = _read_watermark(spark, live_path)
         live_seqs = {
             int(s.getPath().getName().split("=", 1)[1])
             for s in fs.globStatus(jpath(f"{live_path}/*/batch_seq=*"))
             or []
         }
-        if wm is None and COMPACTED_BATCH_SEQ in live_seqs:
-            raise IOError(
-                "compaction crash recovery refused: the live tree at "
-                f"{live_path} has a compacted generation with no "
-                f"watermark (legacy fold) and a displaced tree at "
-                f"{live_path}.old — committed window batches in .old "
-                "are indistinguishable from folded history, so deleting "
-                ".old could drop committed data; adjudicate manually"
-            )
         missed = {
             s
             for s in committed_batch_seqs(spark, ledger_path) - live_seqs
             if wm is None or s > wm
         }
-        for s in (
-            fs.globStatus(jpath(f"{live_path}.old/*/batch_seq=*")) or []
+        if _rescue_missed_leaves(
+            fs, jpath, live_path, missed, "crash-recovery rescue"
         ):
-            seq = int(s.getPath().getName().split("=", 1)[1])
-            if seq not in missed:
-                continue
-            leaf = s.getPath()
-            key_name = leaf.getParent().getName()
-            fs.mkdirs(jpath(f"{live_path}/{key_name}"))
-            dest = jpath(f"{live_path}/{key_name}/{leaf.getName()}")
-            if not fs.rename(leaf, dest):
-                raise IOError(
-                    "crash-recovery rescue failed: committed "
-                    f"generation {seq} leaf {leaf} could not be moved "
-                    f"into {dest}"
-                )
-        if missed:
             # the rescue renamed outside Spark's write path
             invalidate_swapped_path(spark, live_path)
     _swap_recovery(fs, live, old, tmp)
@@ -793,55 +802,27 @@ def compact_store_tree(
     # generation set is exactly the observed partition leaves, so the
     # head of the REAL generations (the compacted -1 generation's
     # position in history is the watermark, not its partition value)
-    # and compacted-generation presence come from the glob, and the
-    # live row count comes from the parquet footers of the leaves'
-    # files — the same numbers the scan's aggregate produced, no job.
+    # comes from the glob, and the live row count comes from the
+    # parquet footers of the leaves' files — the same numbers the
+    # scan's aggregate produced, no job.
     real = [s for s in observed if s >= 0]
     head = max(real) if real else None
-    by_seq: dict[int, list] = {}
+    files = []
     for s in fs.globStatus(jpath(f"{live_path}/*/batch_seq=*/*")) or []:
-        if not s.getPath().getName().endswith(".parquet"):
-            continue
         seq = int(s.getPath().getParent().getName().split("=", 1)[1])
-        if seq in observed:
-            by_seq.setdefault(seq, []).append(s)
-    seq_rows = {
-        seq: _footer_row_counts(spark, fs, ss)
-        for seq, ss in by_seq.items()
-    }
-    n_live = sum(seq_rows.values())
-    n_compacted = seq_rows.get(COMPACTED_BATCH_SEQ, 0)
+        if s.getPath().getName().endswith(".parquet") and seq in observed:
+            files.append(s)
+    n_live = _footer_row_counts(spark, fs, files)
     if n_live == 0:
         return 0
-    if upto_seq is not None and prior_wm is None and n_compacted > 0:
-        # LEGACY store (compacted before watermarks existed): its -1
-        # generation may already hold generations folded ABOVE upto_seq,
-        # so writing watermark=upto_seq would let read_store_asof serve
-        # a false temporal snapshot. The full-collapse branch handles
-        # this case by writing no watermark; a RETENTION compaction's
-        # whole point is the watermark, so refuse it — full-collapse
-        # the legacy store first, then retention semantics apply to the
-        # generations appended after that.
-        raise ValueError(
-            "retention compaction refused: this store has a compacted "
-            f"generation (batch_seq={COMPACTED_BATCH_SEQ}) with no "
-            "watermark (legacy compaction) — the folded history above "
-            f"upto_seq={upto_seq} is unknowable, so a watermark written "
-            "here would falsify as-of reads; run a full collapse "
-            "(upto_seq=None) first"
-        )
     df = _apply_tombstone_mask(
         spark, df, tombstones_path, tombstone_ledger_path, id_col
     )
     if upto_seq is None:
         folded = df.withColumn("batch_seq", F.lit(COMPACTED_BATCH_SEQ))
-        candidates = [
-            x for x in (head, prior_wm) if x is not None
-        ]
-        # candidates empty only for a LEGACY store (compacted before
-        # watermarks existed, nothing but -1 rows): its true head is
-        # unknowable, so write no watermark rather than a wrong one
-        watermark = max(int(x) for x in candidates) if candidates else None
+        # a tree holding only the -1 generation carries the watermark
+        # of the compaction that wrote it
+        watermark = max(x for x in (head, prior_wm) if x is not None)
     else:
         fold_mask = F.col("batch_seq") <= F.lit(upto_seq)
         folded = df.withColumn(
@@ -924,8 +905,9 @@ def compact_store_tree(
             .partitionBy(key_col, "batch_seq")
             .parquet(live_path + ".compact")
         )
-    if watermark is not None:
-        _write_watermark(spark, live_path + ".compact", watermark)
+    _write_small_text(
+        spark, f"{live_path}.compact/{_WATERMARK_NAME}", str(watermark)
+    )
 
     rescued_any = [False]
 
@@ -934,29 +916,11 @@ def compact_store_tree(
         # accounted for in the ledger but absent from the rewrite (the
         # scan was pinned before it landed): its leaves exist only in
         # the displaced old tree. Move them into the compacted tree
-        # before the old copy is destroyed — the rescue is a per-leaf
-        # rename, same-filesystem metadata ops.
-        committed = committed_batch_seqs(spark, ledger_path)
-        missed = committed - {s for s in observed if s >= 0}
-        if not missed:
-            return
-        for s in (
-            fs.globStatus(jpath(f"{live_path}.old/*/batch_seq=*")) or []
-        ):
-            seq = int(s.getPath().getName().split("=", 1)[1])
-            if seq not in missed:
-                continue
-            leaf = s.getPath()
-            key_name = leaf.getParent().getName()
-            fs.mkdirs(jpath(f"{live_path}/{key_name}"))
-            dest = jpath(f"{live_path}/{key_name}/{leaf.getName()}")
-            if not fs.rename(leaf, dest):
-                raise IOError(
-                    "compaction reconcile failed: committed generation "
-                    f"{seq} leaf {leaf} could not be moved into the "
-                    f"compacted tree at {dest}"
-                )
-            rescued_any[0] = True
+        # before the old copy is destroyed.
+        missed = committed_batch_seqs(spark, ledger_path) - observed
+        rescued_any[0] = _rescue_missed_leaves(
+            fs, jpath, live_path, missed, "compaction reconcile"
+        )
 
     _checked_swap(
         fs,
@@ -1062,8 +1026,7 @@ def read_store_asof(
     generations ``0..watermark``) plus the preserved generations up to
     ``batch_seq``; below the watermark the history is gone and the read
     raises — Delta's retention window, stated rather than silently
-    wrong. Legacy stores compacted before watermarks existed raise for
-    every as-of.
+    wrong.
 
     ERASURE WINS OVER TIME TRAVEL. With ``tombstones_path`` set (plus
     ``tombstone_ledger_path`` and ``id_col``), committed tombstones are
@@ -1088,18 +1051,8 @@ def read_store_asof(
             spark, df, tombstones_path, tombstone_ledger_path, id_col
         )
 
-    fs, jpath = _fs(spark, data_path)
-    compacted = fs.globStatus(
-        jpath(f"{data_path}/*/batch_seq={COMPACTED_BATCH_SEQ}")
-    )
-    if compacted is not None and len(compacted) > 0:
-        wm = _read_watermark(spark, data_path)
-        if wm is None:
-            raise ValueError(
-                "as-of read unavailable: this store has a compacted "
-                f"generation (batch_seq={COMPACTED_BATCH_SEQ}) with no "
-                "watermark — its per-batch history is collapsed"
-            )
+    wm = _read_watermark(spark, data_path)
+    if wm is not None:
         if batch_seq < wm:
             raise ValueError(
                 f"as-of read unavailable: batch_seq {batch_seq} predates "

@@ -45,23 +45,6 @@ had; callers that run direct takedowns concurrently with an ACTIVE
 drain own that serialization, exactly like every other single-writer
 maintenance op here.
 
-Stores written by the pre-marker scheme (a ``_stream_epoch_base`` file
-mapping epoch ``k`` to ``base+k``) stay replay-safe across the
-upgrade: an epoch with no marker whose legacy slot is already
-committed AND whose id set matches that slot's committed content is
-recognized as a replay of its old commit and reuses it. The content
-check is what bounds legacy recognition (r16, from the r15 advisory):
-slot occupancy alone misclassifies a genuinely NEW epoch — after
-legacy epochs ``0..j``, a direct auto-sequenced append takes
-``max(committed)+1 = base+j+1``, exactly epoch ``j+1``'s legacy slot,
-and the un-verified scheme would no-op that epoch and drop its
-takedown ids on the floor. Verifying the slot's actual ids (an
-anti-join both ways over two takedown-sized sets, paid only on the
-marker-less-epoch-on-upgraded-store path) makes the recognition
-exact: a true replay matches by construction, and a collision with a
-foreign batch that happens to carry the SAME ids is indistinguishable
-from a replay in outcome — the ids are already committed either way.
-
 Exactly-once shape inherited from the tombstone protocol: a replayed
 committed epoch is a ledger no-op, a mid-write crash self-heals on the
 epoch's retry, an empty epoch commits ``(seq, 0)``. Tombstone batches
@@ -76,22 +59,15 @@ import hashlib
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..io.maintenance import _fs, append_tombstones, committed_batch_seqs
+from ..io.maintenance import (
+    _fs,
+    _read_small_text,
+    _write_small_text,
+    append_tombstones,
+    committed_batch_seqs,
+)
 
 _EPOCH_SEQ_DIR = "_stream_epoch_seqs"
-_LEGACY_BASE_NAME = "_stream_epoch_base"
-
-
-def _read_small_text(spark: SparkSession, fs, path) -> str | None:
-    """Whole small-file read through the Hadoop FS API (None if absent)."""
-    if not fs.exists(path):
-        return None
-    util = spark._jvm.org.apache.commons.io.IOUtils
-    stream = fs.open(path)
-    try:
-        return util.toString(stream, "UTF-8")
-    finally:
-        stream.close()
 
 
 def _stream_token(checkpoint_dir: str) -> str:
@@ -104,12 +80,6 @@ def _stream_token(checkpoint_dir: str) -> str:
     return hashlib.sha256(checkpoint_dir.encode("utf-8")).hexdigest()[:16]
 
 
-def _marker_path(jpath, ledger_path: str, token: str, epoch_id: int):
-    return jpath(
-        f"{ledger_path}/{_EPOCH_SEQ_DIR}/{token}-epoch-{epoch_id}"
-    )
-
-
 def _reserved_seqs(spark: SparkSession, ledger_path: str) -> set[int]:
     """Every sequence any stream epoch has RESERVED (marker written),
     committed or not — a crashed epoch keeps its slot against later
@@ -120,105 +90,33 @@ def _reserved_seqs(spark: SparkSession, ledger_path: str) -> set[int]:
         return set()
     out: set[int] = set()
     for s in fs.listStatus(d):
-        txt = _read_small_text(spark, fs, s.getPath())
-        if txt and txt.strip():
-            out.add(int(txt.strip()))
+        txt = _read_small_text(spark, str(s.getPath()))
+        if txt:
+            out.add(int(txt))
     return out
-
-
-def _legacy_slot_content_matches(
-    spark: SparkSession,
-    tombstones_path: str,
-    tombstone_ledger_path: str,
-    slot: int,
-    batch_ids: DataFrame,
-    id_col: str,
-) -> bool:
-    """True iff the committed batch at ``slot`` holds exactly this
-    epoch's id set — the verification that bounds legacy-replay
-    recognition (module docstring). Both sides are takedown-sized; the
-    check is two anti-join emptiness probes on the rare marker-less
-    upgrade path, not a hot-loop cost."""
-    from ..io.maintenance import _ledger_rows
-
-    fs, jpath = _fs(spark, tombstones_path)
-    leaf = jpath(f"{tombstones_path}/batch_seq={slot}")
-    ids = batch_ids.select(id_col).distinct()
-    if not fs.exists(leaf):
-        rows = _ledger_rows(spark, tombstone_ledger_path) or []
-        n_ids = next(
-            (int(r.n_ids) for r in rows if r.batch_seq == slot), 0
-        )
-        if n_ids > 0:
-            # committed NON-EMPTY slot whose data leaf is physically
-            # gone: a full-collapse compaction erased the tombstone
-            # DATA tree (the ledger survives — that is the erasure
-            # lifecycle). The content is unverifiable by construction,
-            # but the ledger proves this epoch's legacy slot committed
-            # with real ids; falling through to a new sequence here
-            # would RE-commit the same takedown ids under a fresh slot
-            # and consumers would see the delta twice (r17, from the
-            # r16 advisory). Treat it as the replay it is.
-            return True
-        # empty legacy commit ((seq, 0) ledger row, no data leaf):
-        # matches only an empty epoch
-        return ids.isEmpty()
-    committed_ids = spark.read.parquet(str(leaf)).select(id_col)
-    return (
-        committed_ids.join(ids, id_col, "left_anti").isEmpty()
-        and ids.join(committed_ids, id_col, "left_anti").isEmpty()
-    )
 
 
 def _allocate_epoch_seq(
     spark: SparkSession,
-    tombstones_path: str,
     tombstone_ledger_path: str,
     checkpoint_dir: str,
     epoch_id: int,
-    batch_ids: DataFrame,
-    id_col: str,
 ) -> int:
     """The batch sequence for one stream epoch: the persisted marker if
     this epoch ran before (retry → same sequence → replay guard sees
     the same batch), else one past everything committed or reserved,
     persisted BEFORE the caller appends (see module docstring)."""
-    fs, jpath = _fs(spark, tombstone_ledger_path)
-    token = _stream_token(checkpoint_dir)
-    marker = _marker_path(jpath, tombstone_ledger_path, token, epoch_id)
-    txt = _read_small_text(spark, fs, marker)
-    if txt is not None and txt.strip():
-        return int(txt.strip())
-    committed = committed_batch_seqs(spark, tombstone_ledger_path)
-    # pre-marker stores: epoch k committed at base+k; this epoch is a
-    # REPLAY of its legacy commit only if that slot is committed AND
-    # holds this epoch's exact id set (see module docstring — slot
-    # occupancy alone silently drops a new epoch whose slot a direct
-    # append claimed)
-    legacy = _read_small_text(
-        spark, fs, jpath(f"{tombstone_ledger_path}/{_LEGACY_BASE_NAME}")
+    marker = (
+        f"{tombstone_ledger_path}/{_EPOCH_SEQ_DIR}/"
+        f"{_stream_token(checkpoint_dir)}-epoch-{epoch_id}"
     )
-    if (
-        legacy is not None
-        and (int(legacy.strip()) + epoch_id) in committed
-        and _legacy_slot_content_matches(
-            spark,
-            tombstones_path,
-            tombstone_ledger_path,
-            int(legacy.strip()) + epoch_id,
-            batch_ids,
-            id_col,
-        )
-    ):
-        seq = int(legacy.strip()) + epoch_id
-    else:
-        taken = committed | _reserved_seqs(spark, tombstone_ledger_path)
-        seq = (max(taken) + 1) if taken else 0
-    out = fs.create(marker, True)
-    try:
-        out.write(str(seq).encode("utf-8"))
-    finally:
-        out.close()
+    txt = _read_small_text(spark, marker)
+    if txt:
+        return int(txt)
+    taken = committed_batch_seqs(spark, tombstone_ledger_path)
+    taken |= _reserved_seqs(spark, tombstone_ledger_path)
+    seq = (max(taken) + 1) if taken else 0
+    _write_small_text(spark, marker, str(seq))
     return seq
 
 
@@ -245,13 +143,7 @@ def stream_tombstone_ingest(
 
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
         seq = _allocate_epoch_seq(
-            spark,
-            tombstones_path,
-            tombstone_ledger_path,
-            checkpoint_dir,
-            int(epoch_id),
-            batch_df.select(id_col),
-            id_col,
+            spark, tombstone_ledger_path, checkpoint_dir, int(epoch_id)
         )
         append_tombstones(
             spark,

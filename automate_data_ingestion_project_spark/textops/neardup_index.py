@@ -208,14 +208,6 @@ class NearDupIndex:
             self._read_or_empty(self.rows_path, "doc_id long, s string")
         )
 
-    def has_hashes(self) -> bool:
-        """Whether this index carries the per-doc content-hash roster
-        (indexes written before it existed don't; the collision guard
-        then falls back to the resolution-limited shingle comparison)."""
-        from ..io.maintenance import store_exists
-
-        return store_exists(self.spark, self.hashes_path)
-
     def hashes(self) -> DataFrame:
         return self._mask(
             self._read_or_empty(
@@ -296,81 +288,32 @@ class NearDupIndex:
         rows, bands = self._batch_derivations(batch)
         return self._decisions(batch, rows, bands, broadcast_batch)
 
-    def _assert_no_content_collisions(
-        self, batch: DataFrame, batch_rows: DataFrame
-    ) -> None:
+    def _assert_no_content_collisions(self, batch: DataFrame) -> None:
         """Raise if a batch doc_id already indexed carries different
         content than its indexed copy — the silent-miss case documented
         on :meth:`filter_batch`.
 
-        Primary path — the content-hash roster (:func:`content_hashes`,
-        present on any index written by this version): colliding ids
-        come from the roster (one row per indexed doc, so shingle-free
-        documents ARE covered) and content equality is one md5 compare.
-        Cost: a 2-column scan of the roster semi-joined to the
-        broadcast batch ids — strictly cheaper than touching shingles,
-        and bounded by the batch.
-
-        Legacy fallback (pre-roster index directories): colliding ids
-        are seeded from the BAND table and compared as shingle sets
-        (symmetric difference of DISTINCT (id, s) rows). This path is
-        RESOLUTION-LIMITED by construction: a text shorter than the
-        shingle width (3 words) has no bands and no shingles, so an
-        indexed sub-3-word doc never enters the check and two different
-        sub-3-word contents sharing an id pass silently. Rebuild the
-        index with this version to close the gap — ingests deliberately
-        do NOT start a partial roster on a pre-roster index (the
-        already-indexed docs' texts are gone, so it could never be
-        completed; see the invariant note in :meth:`ingest_batch`).
+        Colliding ids come from the content-hash roster
+        (:func:`content_hashes` — one row per indexed doc, so
+        shingle-free documents ARE covered) and content equality is one
+        md5 compare. Cost: a 2-column scan of the roster semi-joined to
+        the broadcast batch ids — strictly cheaper than touching
+        shingles, and bounded by the batch.
         """
-        batch_ids = batch.select("doc_id")
-        if self.has_hashes():
-            idx_h = (
-                self.hashes()
-                .join(F.broadcast(batch_ids), "doc_id", "left_semi")
-                .withColumnRenamed("content_md5", "indexed_md5")
-            )
-            # null-safe: md5(NULL text) is NULL, and a plain != would
-            # evaluate to NULL and silently DROP a NULL-vs-real-content
-            # collision — the exact silent-miss class the guard exists
-            # to raise on. eqNullSafe treats two NULL texts as equal
-            # (same content) and NULL-vs-value as a mismatch.
-            mismatched = (
-                idx_h.join(content_hashes(batch), "doc_id")
-                .filter(
-                    ~F.col("indexed_md5").eqNullSafe(F.col("content_md5"))
-                )
-                .select("doc_id")
-            )
-            bad = [r.doc_id for r in mismatched.limit(20).collect()]
-            if bad:
-                raise ValueError(
-                    "id/content collision: batch doc_ids already indexed "
-                    f"with DIFFERENT content (first {len(bad)}): {bad}. "
-                    "Replay safety would silently skip comparing these — "
-                    "re-id the batch or reconcile the contents."
-                )
-            return
-        # materialize the colliding-id set ONCE (eager localCheckpoint):
-        # it feeds both shingle semi-joins below, and an uncached
-        # subquery would re-run its band-table id scan per consumer —
-        # twice the guard's dominant I/O
-        colliding = (
-            self.bands()
-            .select("doc_id")
-            .join(F.broadcast(batch_ids), "doc_id", "left_semi")
-            .distinct()
-            .localCheckpoint(eager=True)
+        idx_h = (
+            self.hashes()
+            .join(F.broadcast(batch.select("doc_id")), "doc_id", "left_semi")
+            .withColumnRenamed("content_md5", "indexed_md5")
         )
-        idx_r = self.rows().join(F.broadcast(colliding), "doc_id", "left_semi")
-        bat_r = batch_rows.join(F.broadcast(colliding), "doc_id", "left_semi")
+        # null-safe: md5(NULL text) is NULL, and a plain != would
+        # evaluate to NULL and silently DROP a NULL-vs-real-content
+        # collision — the exact silent-miss class the guard exists to
+        # raise on. eqNullSafe treats two NULL texts as equal (same
+        # content) and NULL-vs-value as a mismatch.
         mismatched = (
-            idx_r.unionByName(bat_r)
-            .groupBy("doc_id", "s")
-            .count()
-            .filter(F.col("count") == 1)
+            idx_h.join(content_hashes(batch), "doc_id")
+            .filter(~F.col("indexed_md5").eqNullSafe(F.col("content_md5")))
             .select("doc_id")
-            .distinct()
         )
         bad = [r.doc_id for r in mismatched.limit(20).collect()]
         if bad:
@@ -453,7 +396,7 @@ class NearDupIndex:
         # class the bucketed build's finally was added to prevent.
         try:
             if check_id_collisions:
-                self._assert_no_content_collisions(batch, rows)
+                self._assert_no_content_collisions(batch)
             # Pin the decision table to the PRE-append index snapshot:
             # eager localCheckpoint materializes it NOW and truncates
             # the lineage, so no later recompute can re-list the index
@@ -478,20 +421,14 @@ class NearDupIndex:
                 F.col("batch_id").alias("doc_id")
             )
             # replay guard: drop ids the index already holds
-            # (column-pruned scan of the index id column vs the
-            # broadcast batch id set). Seed from the ROSTER when it
-            # exists: it holds one row per indexed doc INCLUDING
-            # shingle-free docs, which have no bands — band-seeding
-            # re-accepted those on every replay, whose rows/bands
-            # appends were empty no-ops but whose roster append
-            # duplicated their (doc_id, md5) row per replay. The band
-            # table remains the guard on pre-roster indexes, where
-            # shingle-free re-appends are no-ops everywhere.
-            idx_ids = (
-                self.hashes() if self.has_hashes() else self.bands()
-            ).select("doc_id")
+            # (column-pruned scan of the roster's id column vs the
+            # broadcast batch id set). The roster holds one row per
+            # indexed doc INCLUDING shingle-free docs, which have no
+            # bands — a band-seeded guard re-accepted those on every
+            # replay and duplicated their (doc_id, md5) roster row.
             already = (
-                idx_ids
+                self.hashes()
+                .select("doc_id")
                 .join(F.broadcast(accepted), "doc_id", "left_semi")
                 .distinct()
             )
@@ -505,18 +442,10 @@ class NearDupIndex:
             new_bands = bands.join(
                 F.broadcast(new_ids), "doc_id", "left_semi"
             )
-            # roster invariant: the content-hash table exists ⟺ it is
-            # COMPLETE (covers every indexed doc). Indexes born with the
-            # roster extend it per ingest; a pre-roster index never
-            # gains a partial one (originals' texts are gone, so it
-            # could not be backfilled), keeping the guard's fallback
-            # decision sound.
-            new_hashes = (
-                content_hashes(batch).join(
-                    F.broadcast(new_ids), "doc_id", "left_semi"
-                )
-                if self.has_hashes()
-                else None
+            # the roster covers every indexed doc: each ingest extends
+            # it with exactly the docs it appends
+            new_hashes = content_hashes(batch).join(
+                F.broadcast(new_ids), "doc_id", "left_semi"
             )
             self._append(new_rows, new_bands, new_hashes)
         finally:
@@ -533,26 +462,22 @@ class NearDupIndex:
         return decisions
 
     def _append(
-        self,
-        new_rows: DataFrame,
-        new_bands: DataFrame,
-        new_hashes: DataFrame | None = None,
+        self, new_rows: DataFrame, new_bands: DataFrame, new_hashes: DataFrame
     ) -> None:
         # Append ORDER is the crash-safety contract: rows, then bands,
         # then the roster LAST. The replay guard seeds already-indexed
-        # ids from the roster when it exists (ingest_batch), so a
-        # roster row must imply the doc's rows+bands appends committed
-        # — the roster is the commit marker. Writing it earlier would
-        # let a crash between roster and bands appends strand a doc in
-        # the roster with no bands: a retried ingest drops it as
-        # already indexed and it is permanently invisible to band
-        # probing, the silent-miss class this module guards against.
+        # ids from the roster (ingest_batch), so a roster row must imply
+        # the doc's rows+bands appends committed — the roster is the
+        # commit marker. Writing it earlier would let a crash between
+        # roster and bands appends strand a doc in the roster with no
+        # bands: a retried ingest drops it as already indexed and it is
+        # permanently invisible to band probing, the silent-miss class
+        # this module guards against.
         # With roster-last, a crash mid-append means the retry
         # re-appends — duplicate rows/bands rows, which are benign:
         # candidate generation applies ``.distinct()`` and the Jaccard
         # verify uses ``array_intersect``/``array_union`` set-ops
-        # (duplicate-insensitive). Same failure mode the legacy
-        # band-seeded guard had.
+        # (duplicate-insensitive).
         #
         # The rows and bands appends are mutually independent (only
         # the roster orders after BOTH), so they run as concurrent
@@ -581,8 +506,7 @@ class NearDupIndex:
                 new_bands.write.mode("append").parquet(self.bands_path)
 
         run_concurrently(_write_rows, _write_bands)
-        if new_hashes is not None:
-            new_hashes.write.mode("append").parquet(self.hashes_path)
+        new_hashes.write.mode("append").parquet(self.hashes_path)
 
     # -- maintenance ---------------------------------------------------------
 

@@ -381,7 +381,6 @@ def test_collision_guard_covers_shingle_free_docs(spark, tmp_path):
         "doc_id long, text string",
     )
     index = NearDupIndex.build(spark, corpus, str(tmp_path / "idx"))
-    assert index.has_hashes()
     # roster covers the shingle-free doc even though bands/shingles don't
     assert 1 in {r.doc_id for r in index.hashes().collect()}
     # true replay of the short doc: same id, same content — allowed
@@ -430,6 +429,41 @@ def test_collision_guard_roster_extends_across_ingests(spark, tmp_path):
         index.ingest_batch(impostor, check_id_collisions=True)
 
 
+def test_full_erasure_delete_compact_keeps_roster_collision_guard(
+    spark, tmp_path
+):
+    """Deleting every document and compacting removes all three trees,
+    the roster included. The next ingest must start the roster again:
+    an absent roster is an empty one, so the ingested doc joins it and
+    the collision guard keeps covering shingle-free docs (it used to
+    stop writing roster rows for good once the tree was gone)."""
+    import pytest
+
+    from automate_data_ingestion_project_spark.textops.neardup_index import (
+        NearDupIndex,
+    )
+
+    corpus = spark.createDataFrame(
+        [(1, "hi there"), (2, "the quick brown fox jumps over the dog")],
+        "doc_id long, text string",
+    )
+    index = NearDupIndex.build(spark, corpus, str(tmp_path / "idx"))
+    index.delete_docs(corpus.select("doc_id"))
+    index.compact()
+    assert index.hashes().count() == 0
+
+    short = spark.createDataFrame(
+        [(7, "two words")], "doc_id long, text string"
+    )
+    index.ingest_batch(short, check_id_collisions=True).collect()
+    assert 7 in {r.doc_id for r in index.hashes().collect()}
+    impostor = spark.createDataFrame(
+        [(7, "other words")], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match="id/content collision.*7"):
+        index.ingest_batch(impostor, check_id_collisions=True)
+
+
 def test_roster_is_append_commit_marker(spark, tmp_path, monkeypatch):
     """A crash DURING an ingest's bands append must leave the doc out
     of the roster, so the retried ingest re-appends instead of
@@ -449,7 +483,6 @@ def test_roster_is_append_commit_marker(spark, tmp_path, monkeypatch):
         "doc_id long, text string",
     )
     index = NearDupIndex.build(spark, corpus, str(tmp_path / "idx"))
-    assert index.has_hashes()
 
     b1 = spark.createDataFrame(
         [(11, "completely different words about distributed query engines")],
@@ -490,41 +523,6 @@ def test_roster_is_append_commit_marker(spark, tmp_path, monkeypatch):
         r.batch_id: r.is_near_dup for r in index.ingest_batch(b2).collect()
     }
     assert d2 == {20: True}
-
-
-def test_collision_guard_legacy_index_fallback(spark, tmp_path):
-    """Index directories written before the roster existed fall back to
-    the shingle-set comparison: ≥3-word collisions still raise, the
-    roster is NOT partially created by later ingests (exists ⟺
-    complete), and the documented resolution limit applies."""
-    import shutil
-
-    import pytest
-
-    from automate_data_ingestion_project_spark.textops.neardup_index import (
-        NearDupIndex,
-    )
-
-    corpus = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog today")],
-        "doc_id long, text string",
-    )
-    index = NearDupIndex.build(spark, corpus, str(tmp_path / "idx"))
-    shutil.rmtree(index.hashes_path)  # simulate a pre-roster index
-    assert not index.has_hashes()
-    novel = spark.createDataFrame(
-        [(11, "completely different words about distributed query engines")],
-        "doc_id long, text string",
-    )
-    index.ingest_batch(novel, check_id_collisions=True).collect()
-    # a pre-roster index must not grow a PARTIAL roster
-    assert not index.has_hashes()
-    impostor = spark.createDataFrame(
-        [(11, "some entirely unrelated impostor text goes right here")],
-        "doc_id long, text string",
-    )
-    with pytest.raises(ValueError, match="id/content collision.*11"):
-        index.ingest_batch(impostor, check_id_collisions=True)
 
 
 def test_bucketed_build_releases_its_persist(spark, tmp_path):
@@ -982,9 +980,7 @@ def test_stream_epoch_marker_retry_and_stream_isolation(spark, tmp_path):
     ids = spark.range(0, 2).select(F.col("id").alias("doc_id"))
 
     def alloc(ckpt, epoch):
-        return _allocate_epoch_seq(
-            spark, t_data, t_ledger, ckpt, epoch, ids, "doc_id"
-        )
+        return _allocate_epoch_seq(spark, t_ledger, ckpt, epoch)
 
     # stream A epoch 0 allocates 0 and commits
     seq = alloc(ck_a, 0)
@@ -1002,123 +998,6 @@ def test_stream_epoch_marker_retry_and_stream_isolation(spark, tmp_path):
 
     # a committed epoch's retry also reuses its marker (replay no-op)
     assert alloc(ck_a, 0) == 0
-
-
-def test_stream_epoch_legacy_base_replay_recognized(spark, tmp_path):
-    """A store written by the pre-marker scheme (_stream_epoch_base,
-    epoch k committed at base+k) stays replay-safe across the upgrade:
-    a marker-less epoch whose legacy slot is committed reuses it (the
-    replay guard then no-ops, exactly-once preserved), while an epoch
-    whose legacy slot is NOT committed allocates fresh."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from automate_data_ingestion_project_spark.io.maintenance import (
-        _fs,
-        append_tombstones,
-    )
-    from automate_data_ingestion_project_spark.streaming.tombstones import (
-        _LEGACY_BASE_NAME,
-        _allocate_epoch_seq,
-    )
-
-    root = str(tmp_path / "store")
-    t_data = os.path.join(root, "tombstones")
-    t_ledger = os.path.join(root, "tombstone_ledger")
-
-    # legacy layout: base=5 persisted, epoch 0 committed at seq 5
-    ids = spark.range(0, 2).select(F.col("id").alias("doc_id"))
-    append_tombstones(spark, t_data, t_ledger, ids, 5, "doc_id")
-    fs, jpath = _fs(spark, t_ledger)
-    out = fs.create(jpath(f"{t_ledger}/{_LEGACY_BASE_NAME}"), True)
-    try:
-        out.write(b"5")
-    finally:
-        out.close()
-
-    ckpt = os.path.join(root, "ckpt")
-    # epoch 0's legacy slot (5+0) is committed with the SAME ids ->
-    # recognized as replay
-    assert (
-        _allocate_epoch_seq(spark, t_data, t_ledger, ckpt, 0, ids, "doc_id")
-        == 5
-    )
-    # epoch 1's legacy slot (5+1) never committed -> fresh allocation
-    # past committed(5) and epoch 0's marker(5)
-    more = spark.range(10, 12).select(F.col("id").alias("doc_id"))
-    assert (
-        _allocate_epoch_seq(spark, t_data, t_ledger, ckpt, 1, more, "doc_id")
-        == 6
-    )
-
-
-def test_stream_epoch_legacy_slot_stolen_by_direct_append_not_a_replay(
-    spark, tmp_path
-):
-    """Regression (r15 advisory, medium): on an upgraded store, a
-    genuinely NEW marker-less epoch whose legacy slot a direct
-    auto-sequenced append already claimed must NOT be misclassified as
-    a replay — the old slot-occupancy-only recognition no-op'd it and
-    dropped its takedown ids on the floor. Content verification makes
-    the epoch allocate a fresh sequence and its ids commit."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from automate_data_ingestion_project_spark.io.maintenance import (
-        _fs,
-        append_tombstones,
-        committed_batch_seqs,
-    )
-    from automate_data_ingestion_project_spark.streaming.tombstones import (
-        _LEGACY_BASE_NAME,
-        _allocate_epoch_seq,
-    )
-
-    root = str(tmp_path / "store")
-    t_data = os.path.join(root, "tombstones")
-    t_ledger = os.path.join(root, "tombstone_ledger")
-
-    # legacy layout: base=5, legacy epoch 0 committed at seq 5
-    legacy_ids = spark.range(0, 2).select(F.col("id").alias("doc_id"))
-    append_tombstones(spark, t_data, t_ledger, legacy_ids, 5, "doc_id")
-    fs, jpath = _fs(spark, t_ledger)
-    out = fs.create(jpath(f"{t_ledger}/{_LEGACY_BASE_NAME}"), True)
-    try:
-        out.write(b"5")
-    finally:
-        out.close()
-
-    # a direct auto-sequenced append interleaves post-upgrade and takes
-    # max(committed)+1 = 6 — exactly epoch 1's legacy slot
-    direct_ids = spark.range(100, 103).select(F.col("id").alias("doc_id"))
-    append_tombstones(spark, t_data, t_ledger, direct_ids, 6, "doc_id")
-
-    # NEW epoch 1 arrives with different ids: slot 6 is committed, but
-    # its content does not match -> fresh allocation (7), not a replay
-    ckpt = os.path.join(root, "ckpt")
-    new_ids = spark.range(200, 202).select(F.col("id").alias("doc_id"))
-    seq = _allocate_epoch_seq(
-        spark, t_data, t_ledger, ckpt, 1, new_ids, "doc_id"
-    )
-    assert seq == 7
-    # and the epoch's ids actually commit under that sequence
-    append_tombstones(spark, t_data, t_ledger, new_ids, seq, "doc_id")
-    assert 7 in committed_batch_seqs(spark, t_ledger)
-    got = {
-        r.doc_id
-        for r in spark.read.parquet(f"{t_data}/batch_seq=7").collect()
-    }
-    assert got == {200, 201}
-
-    # while a TRUE replay of legacy epoch 0 (same ids) still reuses 5
-    assert (
-        _allocate_epoch_seq(
-            spark, t_data, t_ledger, ckpt, 0, legacy_ids, "doc_id"
-        )
-        == 5
-    )
 
 
 def test_ingest_compact_ingest_repeated_has_no_stale_cached_plans(
@@ -1178,61 +1057,6 @@ def test_ingest_compact_ingest_repeated_has_no_stale_cached_plans(
     first = walk(str(tmp_path / "idx_a"))
     second = walk(str(tmp_path / "idx_b"))  # used to FAILED_READ_FILE here
     assert first == second == {10: True, 11: False, 20: True}
-
-
-def test_stream_epoch_legacy_replay_after_physical_erasure(spark, tmp_path):
-    """Regression (r16 advisory, low): a full-collapse compaction
-    physically erases the tombstone DATA tree but keeps the ledger. A
-    later marker-less legacy replay of a committed NON-EMPTY epoch then
-    finds its slot committed but the leaf absent; the content check can
-    no longer verify ids, and falling through to a fresh sequence would
-    RE-commit the same takedown ids (consumers would see the delta
-    twice). The ledger row's n_ids > 0 identifies the erased-slot case
-    and the epoch is recognized as the replay it is."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from automate_data_ingestion_project_spark.io.maintenance import (
-        _fs,
-        append_tombstones,
-        committed_batch_seqs,
-    )
-    from automate_data_ingestion_project_spark.streaming.tombstones import (
-        _LEGACY_BASE_NAME,
-        _allocate_epoch_seq,
-    )
-
-    root = str(tmp_path / "store")
-    t_data = os.path.join(root, "tombstones")
-    t_ledger = os.path.join(root, "tombstone_ledger")
-
-    # legacy layout: base=5, legacy epoch 0 committed at seq 5 with ids
-    legacy_ids = spark.range(0, 2).select(F.col("id").alias("doc_id"))
-    append_tombstones(spark, t_data, t_ledger, legacy_ids, 5, "doc_id")
-    fs, jpath = _fs(spark, t_ledger)
-    out = fs.create(jpath(f"{t_ledger}/{_LEGACY_BASE_NAME}"), True)
-    try:
-        out.write(b"5")
-    finally:
-        out.close()
-
-    # full-collapse erasure: the tombstone DATA tree is deleted, the
-    # ledger survives (the compaction lifecycle's exact end state)
-    fs.delete(jpath(t_data), True)
-
-    # marker-less legacy replay of epoch 0: recognized as the replay of
-    # its committed slot, NOT re-sequenced
-    ckpt = os.path.join(root, "ckpt")
-    seq = _allocate_epoch_seq(
-        spark, t_data, t_ledger, ckpt, 0, legacy_ids, "doc_id"
-    )
-    assert seq == 5
-    # the replayed append no-ops at the guard: no new ledger sequence,
-    # no re-materialized tombstone data
-    append_tombstones(spark, t_data, t_ledger, legacy_ids, seq, "doc_id")
-    assert committed_batch_seqs(spark, t_ledger) == {5}
-    assert not fs.exists(jpath(t_data))
 
 
 def test_estimated_scan_partitions_matches_planner_on_tiny_files(

@@ -335,7 +335,8 @@ def test_ledger_commit_atomicity_and_truncation_tolerance(spark, tmp_path):
     assert not [n for n in names if "inprogress" in n], names
     assert [n for n in names if n.startswith("commit-")], names
 
-    # legacy crash damage: a zero-length commit file in the ledger dir
+    # crash damage: a zero-length commit file in the ledger dir (the
+    # local FS does not fsync before rename)
     open(os.path.join(ledger, "commit-9-truncated.parquet"), "wb").close()
     assert committed_batch_seqs(spark, ledger) == {0, 1}  # driver-side
     assert_ordered_commits(spark, ledger)  # Spark-side (skips empties)
@@ -345,34 +346,6 @@ def test_ledger_commit_atomicity_and_truncation_tolerance(spark, tmp_path):
     )
     assert committed_batch_seqs(spark, ledger) == {0, 1, 2}
     assert read_committed(spark, data, ledger).count() == 30
-
-
-def test_retention_compaction_refuses_legacy_store(spark, tmp_path):
-    """A store compacted before watermarks existed (a -1 generation,
-    no watermark file) cannot take a RETENTION compaction: the folded
-    history above upto_seq is unknowable, so a watermark written there
-    would let read_store_asof serve a false temporal snapshot. The
-    guard refuses; a full collapse remains the documented repair."""
-    import os
-
-    data, ledger = _store(tmp_path)
-    for seq, (lo, hi) in enumerate([(0, 20), (20, 40)]):
-        append_store_batch(
-            spark, data, ledger, _mk_rows(spark, lo, hi), seq, "cell", "vid"
-        )
-    compact_store_tree(spark, data, "cell", "vid")
-    os.remove(os.path.join(data, "_compaction_watermark"))  # fake legacy
-    append_store_batch(
-        spark, data, ledger, _mk_rows(spark, 40, 50), 2, "cell", "vid"
-    )
-    with pytest.raises(ValueError, match="legacy"):
-        compact_store_tree(spark, data, "cell", "vid", upto_seq=2)
-    # no watermark was written and the tree is untouched by the refusal
-    seqs = {
-        r.batch_seq
-        for r in spark.read.parquet(data).select("batch_seq").distinct().collect()
-    }
-    assert seqs == {COMPACTED_BATCH_SEQ, 2}
 
 
 def test_asof_reads_apply_tombstones_by_default(spark, tmp_path):
@@ -864,29 +837,6 @@ def test_crash_recovery_rescues_window_batch_without_watermark(
     assert n == 50  # batch 1 rescued from .old, then folded
     got = _content(read_committed(spark, data, ledger))
     assert sorted(v for v, _, _, _ in got) == list(range(50))
-
-
-def test_crash_recovery_refuses_legacy_ambiguity(spark, tmp_path):
-    """A live tree with a compacted generation but NO watermark (legacy
-    fold) plus a displaced .old tree: committed window batches in .old
-    are indistinguishable from folded history, so recovery must refuse
-    and surface rather than delete .old (which could silently drop
-    committed data)."""
-    import os
-    import shutil
-
-    import pytest as _pytest
-
-    data, ledger = _store(tmp_path)
-    append_store_batch(
-        spark, data, ledger, _mk_rows(spark, 0, 20), 0, "cell", "vid"
-    )
-    compact_store_tree(spark, data, "cell", "vid")
-    os.remove(f"{data}/_compaction_watermark")  # legacy: fold, no wm
-    shutil.copytree(data, data + ".old")
-
-    with _pytest.raises(IOError, match="legacy"):
-        compact_store_tree(spark, data, "cell", "vid", ledger_path=ledger)
 
 
 def test_consume_changes_transactional_offset(spark, tmp_path, monkeypatch):

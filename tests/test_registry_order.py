@@ -69,7 +69,7 @@ R17_CODE_TOUCHED = {
     # removed (append_store_batch / append_tombstones /
     # append_token_shard_batch), 3-way concurrent index compaction,
     # session_conf_scope in masked rewrites, thread-aware
-    # persist_scope, tombstone legacy-replay-after-erasure recognition
+    # persist_scope
     "neardup_store_delete",
     "neardup_compacted_ingest_replay",
     "stream_neardup_ingest_replay",
