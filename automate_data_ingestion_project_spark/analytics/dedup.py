@@ -932,9 +932,9 @@ def neardup_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over a few-hundred-row batch, and 32-partition exchanges pay
     # task/commit overhead on kilobytes (measured 7.0 s → 5.2 s at
     # sf0.1 with 8). Partitioning never changes keyed results; a real
-    # deployment raises it with the batch volume. The decision table is
-    # eagerly materialized inside ingest_batch (localCheckpoint), so
-    # the scoped value governs execution even though the return is lazy.
+    # deployment raises it with the batch volume. ingest_batch is eager
+    # (its decisions come back as a driver-built LocalRelation), so the
+    # scoped value governs all of its execution.
     conf_key = "spark.sql.shuffle.partitions"
     prior = spark.conf.get(conf_key)
     spark.conf.set(conf_key, "8")

@@ -13,7 +13,7 @@ stream's output is an auditable ingestion ledger.
 
 Exactly-once shape, every leg: the index append is replay-idempotent
 (``ingest_batch``'s id guard drops already-indexed docs), the DECISIONS
-are replay-stable (``_decisions`` excludes the batch's own ids from the
+are replay-stable (the probe excludes the batch's own ids from the
 probed snapshot, so a replayed epoch — whose docs the earlier attempt
 already appended — reproduces its original rows instead of flagging
 every doc as its own near-dup), and the ledger write is an overwrite
@@ -64,9 +64,10 @@ def stream_neardup_ingest(
 
     ``shuffle_partitions`` scopes ``spark.sql.shuffle.partitions`` to
     the drain (restored after), the same deployment knob
-    ``run_available_now`` documents: each micro-batch chains several
-    shuffles over a batch-sized relation, and default-width exchanges
-    pay task overhead on kilobytes.
+    ``run_available_now`` documents: each micro-batch's shingling,
+    signature and verify aggregates still shuffle a batch-sized
+    relation, and default-width exchanges pay task overhead on
+    kilobytes.
     """
     stream = (
         spark.readStream.schema(DOC_SCHEMA)

@@ -28,7 +28,7 @@ Every step is deterministic integer arithmetic, so the DuckDB oracle
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Universal-hash family parameters — fixed constants so runs (and the
@@ -310,6 +310,17 @@ def candidate_pairs(bands: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
+def jaccard_terms(a: str, b: str) -> list[Column]:
+    """``n_shared`` and ``n_union`` of two shingle-set array columns —
+    the exact Jaccard terms every verification path compares
+    (``2·n_shared ≥ n_union`` is Jaccard ≥ 0.5). Set-ops, so duplicate
+    array entries never change the result."""
+    return [
+        F.size(F.array_intersect(a, b)).cast("long").alias("n_shared"),
+        F.size(F.array_union(a, b)).cast("long").alias("n_union"),
+    ]
+
+
 def pair_jaccard_stats(
     rows: DataFrame,
     pairs: DataFrame,
@@ -356,16 +367,7 @@ def pair_jaccard_stats(
     return (
         pairs.join(sa, left_col)
         .join(sb, right_col)
-        .select(
-            left_col,
-            right_col,
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            .cast("long")
-            .alias("n_shared"),
-            F.size(F.array_union("sh_a", "sh_b"))
-            .cast("long")
-            .alias("n_union"),
-        )
+        .select(left_col, right_col, *jaccard_terms("sh_a", "sh_b"))
     )
 
 

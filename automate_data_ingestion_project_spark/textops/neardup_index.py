@@ -28,27 +28,36 @@ This module is that loop:
   docs' bands/shingles (idempotently: ids already indexed are skipped,
   so a replayed batch cannot double-append).
 
-Parquet ``append`` is the local-FS stand-in for a transactional table
-commit; the idempotency guard is a column-pruned scan of the index's
-id column semi-joined against the (broadcast) batch ids — a real
-deployment replaces it with PK enforcement / MERGE in the table format.
+A batch is read once and decided on the driver: its ids, candidate
+pairs, roster hits and Jaccard terms are batch-bounded and collected,
+and every plan that reads the index runs before the first append, so
+no checkpoint or pinned listing is needed to keep a decision from
+seeing its own append. Parquet ``append`` is the local-FS stand-in for
+a transactional table commit; the idempotency guard is the roster
+(``content_hashes``) semi-joined to the batch ids, collected and
+subtracted on the driver — a real deployment replaces it with PK
+enforcement / MERGE in the table format.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+from collections import Counter
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
 from ..io.sink import write_bucketed_table
 from ..operators.caching import tracked_persist
 from ..operators.concurrency import run_concurrently
 from .dedup import (
+    jaccard_terms,
     lsh_band_keys,
     minhash_signatures_rows,
-    pair_jaccard_stats,
     shingle_rows,
 )
 
@@ -72,6 +81,67 @@ def content_hashes(docs: DataFrame) -> DataFrame:
     return docs.select(
         "doc_id", F.md5(F.col("text").cast("binary")).alias("content_md5")
     )
+
+
+def _local_relation(
+    spark: SparkSession, schema: StructType, *columns: list
+) -> DataFrame:
+    """Driver-side columns as ONE Arrow-backed ``LocalRelation`` of
+    ``schema`` (nullability included): the stages reading it scan JVM
+    rows, never a Python worker."""
+    return spark.createDataFrame(
+        pa.Table.from_pydict(
+            dict(zip(schema.names, columns)), schema=to_arrow_schema(schema)
+        )
+    )
+
+
+def _decision_schema(id_schema: StructType) -> StructType:
+    """The decision table's schema: ``batch_id`` typed as the batch's
+    ``doc_id``, the counts and the verdict never NULL."""
+    doc_id = id_schema["doc_id"]
+    return StructType(
+        [
+            StructField("batch_id", doc_id.dataType, doc_id.nullable),
+            StructField("n_candidates", LongType(), False),
+            StructField("n_verified_dups", LongType(), False),
+            StructField("is_near_dup", BooleanType(), False),
+        ]
+    )
+
+
+def _assert_unique_ids(ids: list) -> None:
+    """Raise if a ``doc_id`` occurs twice in one batch: it would get two
+    decision rows and two roster rows, and its texts' shingles would
+    merge under one id."""
+    repeated = [i for i, n in Counter(ids).items() if n > 1]
+    if repeated:
+        raise ValueError(
+            f"repeated doc_ids within one batch (first {len(repeated[:20])}): "
+            f"{repeated[:20]}. A doc_id identifies one document — "
+            "re-id or deduplicate the batch."
+        )
+
+
+def _assert_no_content_collisions(batch_md5: dict, hits: list) -> None:
+    """Raise if a batch doc_id already indexed carries different
+    content than its indexed copy — the silent-miss case documented on
+    :meth:`NearDupIndex.filter_batch`.
+
+    ``hits`` are the roster rows (:func:`content_hashes` — one per
+    indexed doc, so shingle-free documents ARE covered) of the batch's
+    ids, and content equality is one md5 compare. Null-safe: md5(NULL
+    text) is NULL; two NULL texts are the same content and NULL-vs-value
+    is a mismatch, as Spark's ``eqNullSafe`` has it (Python ``!=`` on
+    ``None`` gives exactly that)."""
+    bad = [r.doc_id for r in hits if r.content_md5 != batch_md5[r.doc_id]]
+    if bad:
+        raise ValueError(
+            "id/content collision: batch doc_ids already indexed "
+            f"with DIFFERENT content (first {len(bad[:20])}): {bad[:20]}. "
+            "Replay safety would silently skip comparing these — "
+            "re-id the batch or reconcile the contents."
+        )
 
 
 def _bands_table_name(root: str) -> str:
@@ -192,7 +262,8 @@ class NearDupIndex:
 
         if not store_exists(self.spark, path):
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(path)
+        # the declared schema spares Spark a schema-inference job per read
+        return self.spark.read.schema(schema).parquet(path)
 
     def bands(self) -> DataFrame:
         if self.bands_table:
@@ -257,16 +328,17 @@ class NearDupIndex:
 
     # -- the ingestion loop ------------------------------------------------
 
-    def _batch_derivations(self, batch: DataFrame):
-        rows = tracked_persist(shingle_rows(batch))
-        bands = tracked_persist(lsh_band_keys(minhash_signatures_rows(rows)))
-        return rows, bands
-
     def filter_batch(
         self, batch: DataFrame, broadcast_batch: bool = True
     ) -> DataFrame:
         """Decision table (batch_id, n_candidates, n_verified_dups,
         is_near_dup) for a (doc_id, text) batch vs the current index.
+
+        EAGER: the decisions are computed by this call and returned as
+        an Arrow-backed ``LocalRelation`` in batch order (one row per
+        batch doc), so collecting or re-reading the result never
+        touches the index again. A ``doc_id`` repeated within the batch
+        raises ``ValueError``.
 
         PRECONDITION — id/content agreement: a ``doc_id`` is the
         identity of one document's content. A batch id may already be
@@ -285,91 +357,7 @@ class NearDupIndex:
         hint, so the probe becomes a shuffle join — against a
         ``bucket_bands`` index the corpus side reads its buckets in
         place (zero Exchange) and only the batch shuffles."""
-        rows, bands = self._batch_derivations(batch)
-        return self._decisions(batch, rows, bands, broadcast_batch)
-
-    def _assert_no_content_collisions(self, batch: DataFrame) -> None:
-        """Raise if a batch doc_id already indexed carries different
-        content than its indexed copy — the silent-miss case documented
-        on :meth:`filter_batch`.
-
-        Colliding ids come from the content-hash roster
-        (:func:`content_hashes` — one row per indexed doc, so
-        shingle-free documents ARE covered) and content equality is one
-        md5 compare. Cost: a 2-column scan of the roster semi-joined to
-        the broadcast batch ids — strictly cheaper than touching
-        shingles, and bounded by the batch.
-        """
-        idx_h = (
-            self.hashes()
-            .join(F.broadcast(batch.select("doc_id")), "doc_id", "left_semi")
-            .withColumnRenamed("content_md5", "indexed_md5")
-        )
-        # null-safe: md5(NULL text) is NULL, and a plain != would
-        # evaluate to NULL and silently DROP a NULL-vs-real-content
-        # collision — the exact silent-miss class the guard exists to
-        # raise on. eqNullSafe treats two NULL texts as equal (same
-        # content) and NULL-vs-value as a mismatch.
-        mismatched = (
-            idx_h.join(content_hashes(batch), "doc_id")
-            .filter(~F.col("indexed_md5").eqNullSafe(F.col("content_md5")))
-            .select("doc_id")
-        )
-        bad = [r.doc_id for r in mismatched.limit(20).collect()]
-        if bad:
-            raise ValueError(
-                "id/content collision: batch doc_ids already indexed "
-                f"with DIFFERENT content (first {len(bad)}): {bad}. "
-                "Replay safety would silently skip comparing these — "
-                "re-id the batch or reconcile the contents."
-            )
-
-    def _decisions(
-        self,
-        batch: DataFrame,
-        batch_rows: DataFrame,
-        batch_bands: DataFrame,
-        broadcast_batch: bool = True,
-    ) -> DataFrame:
-        # Replay safety: a replayed epoch probes an index that may
-        # already hold THIS batch's docs (the append committed, the
-        # caller's downstream commit didn't). Excluding the batch's own
-        # ids from the probed snapshot makes the decision table a pure
-        # function of (batch, PRIOR corpus) — re-running any batch
-        # reproduces its original decisions instead of flagging every
-        # doc as its own near-dup (and double-counting its shingles in
-        # the Jaccard verify). Broadcast anti-joins on the tiny batch-id
-        # set; a fresh batch makes them no-ops.
-        batch_ids = batch.select("doc_id")
-        idx_bands = self.bands().join(
-            F.broadcast(batch_ids), "doc_id", "left_anti"
-        )
-        idx_rows = self.rows().join(
-            F.broadcast(batch_ids), "doc_id", "left_anti"
-        )
-        probe = batch_bands.withColumnRenamed("doc_id", "batch_id")
-        if broadcast_batch:
-            probe = F.broadcast(probe)
-        cand = (
-            idx_bands.join(probe, "band_key")
-            .select("batch_id", F.col("doc_id").alias("corpus_id"))
-            .distinct()
-        )
-        all_rows = idx_rows.unionByName(batch_rows)
-        stats = pair_jaccard_stats(all_rows, cand, "batch_id", "corpus_id")
-        agg = stats.groupBy("batch_id").agg(
-            F.count("*").alias("n_candidates"),
-            F.sum(
-                F.when(2 * F.col("n_shared") >= F.col("n_union"), 1).otherwise(0)
-            ).alias("n_verified_dups"),
-        )
-        ids = batch.select(F.col("doc_id").alias("batch_id"))
-        return ids.join(agg, "batch_id", "left").select(
-            "batch_id",
-            F.coalesce("n_candidates", F.lit(0)).alias("n_candidates"),
-            F.coalesce("n_verified_dups", F.lit(0)).alias("n_verified_dups"),
-            (F.coalesce("n_verified_dups", F.lit(0)) > 0).alias("is_near_dup"),
-        )
+        return self._run_batch(batch, broadcast_batch, append=False)
 
     def ingest_batch(
         self, batch: DataFrame, check_id_collisions: bool = False
@@ -377,89 +365,185 @@ class NearDupIndex:
         """Filter the batch, then append the ACCEPTED documents'
         bands/shingles to the index so the next batch sees them.
 
-        Returns the decision table. The append reuses the batch's
-        persisted derivations (no recompute), keeps only ids not
-        already present (replay-idempotent), and is the one mutation
-        the loop performs — the corpus index is otherwise read-only.
+        Returns :meth:`filter_batch`'s eager decision table. The append
+        keeps only ids the roster does not already hold
+        (replay-idempotent) and is the one mutation the loop performs —
+        the corpus index is otherwise read-only.
 
         Inherits :meth:`filter_batch`'s id/content-agreement
-        precondition; ``check_id_collisions=True`` enforces it eagerly
-        (one extra bounded action per batch) and raises ``ValueError``
-        on a violation instead of silently missing the near-dup.
+        precondition; ``check_id_collisions=True`` enforces it (a
+        driver-side md5 compare against the roster probe the replay
+        guard already runs) and raises ``ValueError`` on a violation
+        instead of silently missing the near-dup.
         """
-        rows, bands = self._batch_derivations(batch)
-        # Everything from here on must release the two tracked persists
-        # no matter how it exits — INCLUDING the collision guard's
-        # ValueError, whose documented remedy is "re-id and retry": a
-        # continuous caller catching it would otherwise leak two live
-        # persists + registry entries per rejected batch, the exact
-        # class the bucketed build's finally was added to prevent.
-        try:
-            if check_id_collisions:
-                self._assert_no_content_collisions(batch)
-            # Pin the decision table to the PRE-append index snapshot:
-            # eager localCheckpoint materializes it NOW and truncates
-            # the lineage, so no later recompute can re-list the index
-            # parquet after the append below (a lazy persist is not
-            # enough — a recomputed partition would see the batch's own
-            # appended bands and flag every accepted doc as its own
-            # near-dup). The verification intermediates pair_jaccard_
-            # stats persists internally are scoped to this step: once
-            # the decisions are materialized they have no consumer, and
-            # a cached plan over the index trees left live across a
-            # later compact() is recached against the DISPLACED file
-            # listing — the next ingest's matching plan fragment then
-            # reads deleted part files (persist_scope docstring has the
-            # full failure anatomy).
-            from ..operators.caching import persist_scope
+        return self._run_batch(
+            batch, True, append=True, check_id_collisions=check_id_collisions
+        )
 
-            with persist_scope():
-                decisions = self._decisions(batch, rows, bands).localCheckpoint(
-                    eager=True
+    def _run_batch(
+        self,
+        batch: DataFrame,
+        broadcast_batch: bool,
+        append: bool,
+        check_id_collisions: bool = False,
+    ) -> DataFrame:
+        """The one decision path of :meth:`filter_batch` and
+        :meth:`ingest_batch`.
+
+        The batch is read ONCE: its (doc_id, text) projection is
+        persisted, and its ids, content md5s, shingle rows and band
+        keys all derive from that persist. Every batch-bounded
+        intermediate — the ids, the candidate pairs, the roster hits,
+        the Jaccard terms, the decisions, the novel ids — is collected
+        to the driver, and goes back to Spark (where a join needs it)
+        as an Arrow-backed ``LocalRelation``.
+
+        Snapshot: every plan that reads the index is collected before
+        the first append, and nothing built afterwards has index
+        lineage (the appended relations derive from the batch persist
+        and driver-side ids; the decisions are driver rows). So no
+        recompute can ever see this call's own append — no checkpoint,
+        and no pinned file listing, is needed.
+        """
+        spark = self.spark
+        docs = tracked_persist(batch.select("doc_id", "text"))
+        # whichever way this exits — including the guards' ValueError,
+        # whose documented remedy is "re-id and retry" — the persist has
+        # no further consumer, and a continuous caller (the streaming
+        # loop) must not accumulate one per epoch
+        try:
+            id_schema = StructType([docs.schema["doc_id"]])
+            md5s = [tuple(r) for r in content_hashes(docs).collect()]
+            ids = [i for i, _ in md5s]
+            _assert_unique_ids(ids)
+            id_rel = _local_relation(spark, id_schema, ids)
+            rows = shingle_rows(docs)
+            bands = lsh_band_keys(minhash_signatures_rows(rows))
+
+            found: dict = {}
+
+            def _probe() -> None:
+                cand = self._candidates(id_rel, bands, broadcast_batch)
+                found["pairs"] = (cand.schema, cand.collect())
+
+            def _roster() -> None:
+                # one roster probe feeds both ingest guards: batch ids
+                # the index already holds, with their indexed md5s. The
+                # roster holds one row per indexed doc INCLUDING
+                # shingle-free docs, which have no bands — a
+                # band-seeded guard would re-accept those on every
+                # replay and duplicate their roster row
+                found["hits"] = (
+                    self.hashes()
+                    .join(F.broadcast(id_rel), "doc_id", "left_semi")
+                    .collect()
                 )
-            accepted = decisions.filter(~F.col("is_near_dup")).select(
-                F.col("batch_id").alias("doc_id")
+
+            if append:
+                run_concurrently(_probe, _roster)
+            else:
+                _probe()
+            stats = self._verify(*found["pairs"], rows)
+            n_cand = Counter(b for b, _, _ in stats)
+            n_dup = Counter(b for b, shared, union in stats if 2 * shared >= union)
+            decisions = _local_relation(
+                spark,
+                _decision_schema(id_schema),
+                ids,
+                [n_cand[i] for i in ids],
+                [n_dup[i] for i in ids],
+                [n_dup[i] > 0 for i in ids],
             )
-            # replay guard: drop ids the index already holds
-            # (column-pruned scan of the roster's id column vs the
-            # broadcast batch id set). The roster holds one row per
-            # indexed doc INCLUDING shingle-free docs, which have no
-            # bands — a band-seeded guard re-accepted those on every
-            # replay and duplicated their (doc_id, md5) roster row.
-            already = (
-                self.hashes()
-                .select("doc_id")
-                .join(F.broadcast(accepted), "doc_id", "left_semi")
-                .distinct()
-            )
-            # materialize the (batch-bounded) novel-id set ONCE: it
-            # feeds the broadcast build of all three appends below, and
-            # an unmaterialized plan would rescan the roster per append
-            new_ids = accepted.join(already, "doc_id", "left_anti").localCheckpoint(
-                eager=True
-            )
-            new_rows = rows.join(F.broadcast(new_ids), "doc_id", "left_semi")
-            new_bands = bands.join(
-                F.broadcast(new_ids), "doc_id", "left_semi"
-            )
-            # the roster covers every indexed doc: each ingest extends
-            # it with exactly the docs it appends
-            new_hashes = content_hashes(batch).join(
-                F.broadcast(new_ids), "doc_id", "left_semi"
-            )
-            self._append(new_rows, new_bands, new_hashes)
+            if not append:
+                return decisions
+            hits = found["hits"]
+            if check_id_collisions:
+                _assert_no_content_collisions(dict(md5s), hits)
+            # replay guard: drop accepted ids the roster already holds
+            indexed = {r.doc_id for r in hits}
+            new = [i for i in ids if not n_dup[i] and i not in indexed]
+            if new:
+                new_ids = F.broadcast(_local_relation(spark, id_schema, new))
+                # the roster covers every indexed doc: each ingest
+                # extends it with exactly the docs it appends
+                self._append(
+                    rows.join(new_ids, "doc_id", "left_semi"),
+                    bands.join(new_ids, "doc_id", "left_semi"),
+                    content_hashes(docs).join(new_ids, "doc_id", "left_semi"),
+                )
+            return decisions
         finally:
-            # on success the decision table is eagerly materialized and
-            # the appends are done; on failure nothing downstream holds
-            # the derivations — either way they have no further
-            # consumer, and a continuous caller (the streaming loop)
-            # must not accumulate per-epoch persists
             from ..operators.caching import untrack
 
-            for df in (rows, bands):
-                df.unpersist()
-                untrack(df)
-        return decisions
+            docs.unpersist()
+            untrack(docs)
+
+    def _candidates(
+        self, batch_ids: DataFrame, batch_bands: DataFrame, broadcast_batch: bool
+    ) -> DataFrame:
+        """Distinct (batch_id, corpus_id) pairs sharing a band key.
+
+        Replay safety: a replayed epoch probes an index that may
+        already hold THIS batch's docs (the append committed, the
+        caller's downstream commit didn't). Excluding the batch's own
+        ids from the probed snapshot makes the decisions a pure
+        function of (batch, PRIOR corpus) — re-running any batch
+        reproduces its original decisions instead of flagging every
+        doc as its own near-dup. Candidate corpus ids are therefore
+        never batch ids, which keeps the verify's corpus side clean
+        too. A broadcast anti-join on the batch-id relation; a fresh
+        batch makes it a no-op."""
+        probe = batch_bands.withColumnRenamed("doc_id", "batch_id")
+        if broadcast_batch:
+            probe = F.broadcast(probe)
+        return (
+            self.bands()
+            .join(F.broadcast(batch_ids), "doc_id", "left_anti")
+            .join(probe, "band_key")
+            .select("batch_id", F.col("doc_id").alias("corpus_id"))
+            .distinct()
+        )
+
+    def _verify(
+        self, schema: StructType, pairs: list, batch_rows: DataFrame
+    ) -> list[tuple]:
+        """(batch_id, n_shared, n_union) per collected candidate pair.
+
+        The pairs enter as a ``LocalRelation`` and meet two BROADCAST
+        shingle-array inputs: the corpus docs' arrays (the rows tree
+        semi-joined to the candidate corpus ids) and the batch docs'
+        arrays (from the persisted batch). A pair whose corpus doc has
+        no shingle rows drops out, as in :func:`..textops.dedup.
+        pair_jaccard_stats`."""
+        if not pairs:
+            return []
+        pair_rel = _local_relation(
+            self.spark,
+            schema,
+            [p.batch_id for p in pairs],
+            [p.corpus_id for p in pairs],
+        )
+        corpus_ids = _local_relation(
+            self.spark,
+            StructType([StructField("doc_id", schema["corpus_id"].dataType)]),
+            sorted({p.corpus_id for p in pairs}),
+        )
+        corpus_arrs = (
+            self.rows()
+            .join(F.broadcast(corpus_ids), "doc_id", "left_semi")
+            .groupBy(F.col("doc_id").alias("corpus_id"))
+            .agg(F.collect_list("s").alias("sh_c"))
+        )
+        batch_arrs = batch_rows.groupBy(F.col("doc_id").alias("batch_id")).agg(
+            F.collect_list("s").alias("sh_b")
+        )
+        return [
+            tuple(r)
+            for r in pair_rel.join(F.broadcast(batch_arrs), "batch_id")
+            .join(F.broadcast(corpus_arrs), "corpus_id")
+            .select("batch_id", *jaccard_terms("sh_b", "sh_c"))
+            .collect()
+        ]
 
     def _append(
         self, new_rows: DataFrame, new_bands: DataFrame, new_hashes: DataFrame

@@ -110,8 +110,9 @@ def main() -> int:
         "ingest_batch",
         "filter_batch",
         "compact",
-        "_batch_derivations",
-        "_decisions",
+        "_run_batch",
+        "_candidates",
+        "_verify",
         "_append",
         "bands",
         "rows",

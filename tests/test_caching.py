@@ -41,6 +41,10 @@ CACHE_USERS = [
     "corpus_curation_pipeline",
 ]
 
+# cache users that release their own persists before returning
+# (NearDupIndex.filter_batch is eager); the leak check still applies
+SELF_RELEASING = {"incremental_neardup_filter"}
+
 # queries that run connected_components: localCheckpoint blocks (sym +
 # final labels + the last round) legitimately outlive release_caches
 _CHECKPOINT_BOUND = 4
@@ -67,7 +71,7 @@ def test_release_caches_after_query_sweep(spark, sf_dir):
         base_ids = _persistent_ids(spark)
         qs[name](spark, sf_dir).collect()
         created = _persistent_ids(spark) - base_ids
-        assert created, f"{name}: expected live caches"
+        assert created or name in SELF_RELEASING, f"{name}: expected live caches"
         release_caches()
         leaked = _persistent_ids(spark) & created
         assert not leaked, f"{name}: caches left behind: {sorted(leaked)}"

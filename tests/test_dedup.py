@@ -1011,9 +1011,9 @@ def test_ingest_compact_ingest_repeated_has_no_stale_cached_plans(
     substituted with a scan of deleted part files
     (FAILED_READ_FILE.FILE_NOT_EXIST — surfaced once the per-tree
     compactions ran as concurrent driver threads). ingest_batch now
-    scopes those persists to the decision materialization
-    (operators.caching.persist_scope), so the second walk must run
-    clean and reproduce the first walk's decisions."""
+    persists nothing over the index trees (only its batch projection)
+    and collects every index read before it appends, so the second
+    walk must run clean and reproduce the first walk's decisions."""
     from pyspark.sql import functions as F
 
     from automate_data_ingestion_project_spark.textops.neardup_index import (
@@ -1057,6 +1057,173 @@ def test_ingest_compact_ingest_repeated_has_no_stale_cached_plans(
     first = walk(str(tmp_path / "idx_a"))
     second = walk(str(tmp_path / "idx_b"))  # used to FAILED_READ_FILE here
     assert first == second == {10: True, 11: False, 20: True}
+
+
+def _persisted_ids(spark) -> set[int]:
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(i) for i in jmap.keySet().toArray()}
+
+
+def _job_count(spark, tag, action):
+    """Spark jobs ``action`` submits, counted through a job group (the
+    concurrent probe threads inherit it)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(tag)), out
+
+
+def test_ingest_reads_batch_once_and_returns_local_decisions(spark, tmp_path):
+    """The decision path reads its batch ONCE (one persisted
+    projection feeds ids, md5s, shingles and bands), returns its
+    decisions as a driver-built LocalRelation that outlives later index
+    mutations, and submits a pinned number of Spark jobs — a re-added
+    checkpoint, batch re-read or per-step count() fails here."""
+    from automate_data_ingestion_project_spark.operators.caching import (
+        _ACTIVE,
+    )
+    from automate_data_ingestion_project_spark.textops.neardup_index import (
+        NearDupIndex,
+    )
+
+    sc = spark.sparkContext
+    corpus = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog today"),
+            (2, "pack my box with five dozen liquor jugs for shipping"),
+        ],
+        "doc_id long, text string",
+    )
+    index = NearDupIndex.build(spark, corpus, str(tmp_path / "idx"))
+    docs = [
+        (10, "xq the quick brown fox jumps over the lazy dog today"),
+        (11, "completely different words about distributed query engines"),
+    ]
+    reads = sc.accumulator(0)
+
+    def count(row):
+        reads.add(1)
+        return row
+
+    batch = spark.createDataFrame(
+        sc.parallelize(docs).map(count), "doc_id long, text string"
+    )
+    tracked_before = len(_ACTIVE)
+    persisted_before = _persisted_ids(spark)
+    n_jobs, decisions = _job_count(
+        spark, f"ingest-jobs-{id(tmp_path)}", lambda: index.ingest_batch(batch)
+    )
+    # the batch persist is released before the call returns
+    assert len(_ACTIVE) == tracked_before
+    assert _persisted_ids(spark) <= persisted_before
+    first = decisions.collect()
+    assert [tuple(r) for r in first] == [(10, 1, 1, True), (11, 0, 0, False)]
+    assert reads.value == len(docs)
+    assert n_jobs == 23
+    plan = decisions._jdf.queryExecution().analyzed().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan
+    assert decisions.schema.simpleString() == (
+        "struct<batch_id:bigint,n_candidates:bigint,"
+        "n_verified_dups:bigint,is_near_dup:boolean>"
+    )
+
+    # the decisions carry no index lineage: compaction and a further
+    # ingest (which appends) leave them collecting unchanged
+    index.compact()
+    b2 = spark.createDataFrame(
+        [(20, "zz completely different words about distributed query engines")],
+        "doc_id long, text string",
+    )
+    assert [tuple(r) for r in index.ingest_batch(b2).collect()] == [
+        (20, 1, 1, True)
+    ]
+    assert decisions.collect() == first
+
+
+def test_repeated_batch_id_raises_before_any_append(spark, tmp_path):
+    """A doc_id repeated within one batch used to yield two decision
+    rows and two roster rows for one id (a verbatim repeat), or merge
+    two texts' shingles under one id without tripping the collision
+    guard (a repeat with different texts). Both now raise, naming the
+    id, and the index is left untouched."""
+    import pytest
+
+    from automate_data_ingestion_project_spark.textops.neardup_index import (
+        NearDupIndex,
+    )
+
+    corpus = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog today")],
+        "doc_id long, text string",
+    )
+    index = NearDupIndex.build(spark, corpus, str(tmp_path / "idx"))
+    text = "completely different words about distributed query engines"
+    verbatim = spark.createDataFrame(
+        [(10, text), (10, text)], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match=r"repeated doc_ids.*\[10\]"):
+        index.ingest_batch(verbatim)
+    with pytest.raises(ValueError, match=r"repeated doc_ids.*\[10\]"):
+        index.filter_batch(verbatim)
+    merged = spark.createDataFrame(
+        [(20, text), (20, "yet another novel document about stream processing")],
+        "doc_id long, text string",
+    )
+    with pytest.raises(ValueError, match=r"repeated doc_ids.*\[20\]"):
+        index.ingest_batch(merged, check_id_collisions=True)
+    assert sorted(r.doc_id for r in index.hashes().collect()) == [1]
+    assert {r.doc_id for r in index.rows().collect()} == {1}
+
+
+def test_collision_guard_is_null_safe(spark, tmp_path):
+    """md5(NULL text) is NULL: a NULL-text replay matches its indexed
+    NULL copy, while NULL against real content (either way round) is a
+    collision — Spark's eqNullSafe semantics, now compared on the
+    driver."""
+    import pytest
+
+    from automate_data_ingestion_project_spark.textops.neardup_index import (
+        NearDupIndex,
+    )
+
+    corpus = spark.createDataFrame(
+        [(1, None), (2, "the quick brown fox jumps over the dog")],
+        "doc_id long, text string",
+    )
+    index = NearDupIndex.build(spark, corpus, str(tmp_path / "idx"))
+    same = spark.createDataFrame([(1, None)], "doc_id long, text string")
+    index.ingest_batch(same, check_id_collisions=True)
+    for doc_id, text in ((1, "now some real words"), (2, None)):
+        impostor = spark.createDataFrame(
+            [(doc_id, text)], "doc_id long, text string"
+        )
+        with pytest.raises(ValueError, match=f"id/content collision.*{doc_id}"):
+            index.ingest_batch(impostor, check_id_collisions=True)
+
+
+def test_tree_reads_run_no_jobs(spark, tmp_path):
+    """Each tree read declares its schema, so building the band, row
+    and roster relations plans without a parquet schema-inference
+    job."""
+    from automate_data_ingestion_project_spark.textops.neardup_index import (
+        NearDupIndex,
+    )
+
+    corpus = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog today")],
+        "doc_id long, text string",
+    )
+    index = NearDupIndex.build(spark, corpus, str(tmp_path / "idx"))
+    n_jobs, _ = _job_count(
+        spark,
+        f"tree-reads-{id(tmp_path)}",
+        lambda: (index.bands(), index.rows(), index.hashes()),
+    )
+    assert n_jobs == 0
 
 
 def test_estimated_scan_partitions_matches_planner_on_tiny_files(

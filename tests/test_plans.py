@@ -650,6 +650,11 @@ def test_bucketed_neardup_probe_never_reshuffles_index(spark, sf_dir):
     results."""
     import shutil
 
+    from automate_data_ingestion_project_spark.textops.dedup import (
+        lsh_band_keys,
+        minhash_signatures_rows,
+        shingle_rows,
+    )
     from automate_data_ingestion_project_spark.textops.neardup_index import (
         NearDupIndex,
         _bands_table_name,
@@ -681,10 +686,11 @@ def test_bucketed_neardup_probe_never_reshuffles_index(spark, sf_dir):
     try:
         # truncate the batch-derivation lineage (its minhash groupBys
         # shuffle too) so the exchange count isolates the PROBE join.
-        # NOTE: this probes bands() directly (not _decisions) because
+        # NOTE: this probes bands() directly (not _candidates) because
         # the count pins the raw probe-join shape
-        rows, bands = index._batch_derivations(batch)
-        bands = bands.localCheckpoint(eager=True)
+        bands = lsh_band_keys(
+            minhash_signatures_rows(shingle_rows(batch))
+        ).localCheckpoint(eager=True)
         cand = (
             index.bands()
             .join(bands.withColumnRenamed("doc_id", "batch_id"), "band_key")
@@ -696,11 +702,9 @@ def test_bucketed_neardup_probe_never_reshuffles_index(spark, sf_dir):
         assert "Bucketed: true" in plan
         assert plan.count("Exchange hashpartitioning") == 2
 
-        rows_p, bands_p = plain._batch_derivations(batch)
-        bands_p = bands_p.localCheckpoint(eager=True)
         cand_p = (
             plain.bands()
-            .join(bands_p.withColumnRenamed("doc_id", "batch_id"), "band_key")
+            .join(bands.withColumnRenamed("doc_id", "batch_id"), "band_key")
             .select("batch_id", F.col("doc_id").alias("corpus_id"))
             .distinct()
         )
