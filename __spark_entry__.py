@@ -69,79 +69,68 @@ _SMOKE_SF_DIR = "/root/testdata/sf0.001"
 # The driver caps each round at 50 checked queries of the registered
 # set (it checks the first 50 in this ordering; the count rotates
 # round to round). Order the registry so the weakest driver evidence
-# comes first. Round-17 ordering (the second OPTIMIZATION round —
-# nothing new registered, so the window is rotation + re-verification,
-# per the r16 verdict's item 8):
-# (1) ALL 38 rows whose latest driver evidence is r12-vintage — the
-# stalest evidence anywhere in the registry, computed from the
-# CORRECTNESS_r{N}.json hash_match history (after this round the
-# histogram minimum is r13);
-# (2) 12 rows whose behavior-bearing code changed in r17: the two
-# restructured queries (waiting_suppliers' window rewrite,
-# event_sessions_udtf's scoped-conf eager execution) and
-# representative rows over every changed protocol leg (pre-write
-# isEmpty probes removed from append_store_batch / append_tombstones
-# / append_token_shard_batch, the 3-way concurrent index compaction,
-# session_conf_scope in the masked rewrites, thread-aware
-# persist_scope).
-# Every one of these ran green in this round's changed-since oracle
-# drives plus a FULL 203-query drive; this window turns that local
-# evidence into driver evidence. 38 + 12 = 50 fills the window.
+# comes first:
+# (1) the 28 rows whose behavior-bearing code changed after the r17
+# drive: every store, ingest-replay, change-feed and near-dup row (the
+# one ledger-commit primitive, one on-disk format per store, the
+# driver-side near-dup decisions) plus the quantize family;
+# (2) the 22 stalest rows — r13-vintage evidence in the
+# CORRECTNESS_r{N}.json hash_match history, registration order.
+# 28 + 22 = 50 fills the window.
 _CHECK_FIRST = [
-    # (1) the 38 stalest rows (r12-vintage evidence)
-    "ann_ivfpq_topk",
-    "ann_lsh_topk",
-    "ann_pq_recall_eval",
-    "ann_pq_refined_topk",
-    "ann_pq_topk",
-    "ann_recall_eval",
-    "ann_refined_recall_eval",
-    "ann_topk_cosine",
-    "big_ticket_orders",
-    "cheapest_supplier_per_part",
-    "csv_roundtrip_region",
-    "cumulative_new_customers",
-    "customer_interarrival",
-    "customer_order_histogram",
-    "dedup_canonical_keep",
-    "dedup_components",
-    "events_value_histogram",
-    "incremental_daily_rollup",
-    "json_roundtrip_nation",
-    "leakage_safe_split",
-    "minhash_estimate_error",
-    "multimodal_chunks",
-    "multimodal_manifest",
-    "nations_in_region1",
-    "order_priority_exists",
-    "orders_per_year",
-    "parts_bought_together",
-    "pipeline_etl_replay",
-    "pricing_summary",
-    "sales_cube",
-    "skew_salted_agg",
-    "skew_salted_join",
-    "smoke_select_star",
-    "source_doc_cap",
-    "source_registry_sql",
-    "source_token_budget_cap",
-    "upsert_idempotent",
-    "weighted_systematic_sample",
-    # (2) behavior-bearing code changed in r17
-    "waiting_suppliers",
-    "event_sessions_udtf",
-    "neardup_store_delete",
-    "neardup_compacted_ingest_replay",
-    "stream_neardup_ingest_replay",
-    "ivf_store_delete",
-    "ivfpq_store_delete",
-    "shard_store_delete",
-    "stream_shard_store_delete",
-    "cdf_consumer_erasure_propagation",
+    # (1) behavior-bearing code changed after the r17 drive
     "ann_ivf_ingest_replay",
+    "stream_ann_ivf_ingest_replay",
+    "ivf_store_compaction",
+    "ivf_store_delete",
+    "shard_store_ledger_checkpoint",
+    "shard_store_compaction",
+    "shard_store_asof",
+    "shard_store_asof_compacted",
+    "shard_store_delete",
+    "shard_store_asof_erasure",
+    "shard_store_changes",
+    "stream_shard_store_delete",
+    "cdf_incremental_consumer",
+    "cdf_consumer_erasure_propagation",
+    "incremental_neardup_filter",
+    "neardup_ingest_replay",
+    "stream_neardup_ingest_replay",
+    "neardup_compacted_ingest_replay",
+    "neardup_store_delete",
     "ann_ivfpq_ingest_replay",
+    "stream_ann_ivfpq_ingest_replay",
+    "ivfpq_store_delete",
+    "neardup_blast_radius",
+    "neardup_triangles",
+    "label_centroids",
+    "centroid_purity",
+    "kmeans_step",
+    "semantic_dedup_clusters",
+    # (2) the 22 stalest rows (r13-vintage evidence)
+    "peak_concurrent_sessions",
+    "events_variant_props",
+    "ann_ivfpq_refined_topk",
+    "ann_ivfpq_refined_recall_eval",
+    "pq_train_distortion",
+    "ann_pq_trained_recall_eval",
+    "ivf_train_distortion",
+    "ann_ivf_trained_recall_eval",
+    "table_profile_approx",
+    "heavy_hitters_sketch",
+    "quantile_sketch_calibration",
+    "pagerank_step",
+    "orc_roundtrip_supplier",
+    "xml_roundtrip_part",
+    "stream_stream_join",
+    "stream_upsert_foreachbatch",
+    "stream_late_data_drop",
+    "pii_redaction",
+    "orders_trailing_30d_revenue",
+    "promo_revenue_share",
+    "sales_grouping_sets",
+    "median_order_by_nation",
 ]
-
 
 def _ordered_specs():
     """Registry in driver-check order: _CHECK_FIRST (deduped, first

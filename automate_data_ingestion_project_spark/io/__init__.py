@@ -1,5 +1,4 @@
 from .dbf import read_dbf
-from .lakehouse import delta_available, upsert_auto, upsert_delta
 from .sink import (
     align_to_schema,
     path_exists,
@@ -22,7 +21,6 @@ from .sources import (
 __all__ = [
     "TABLES",
     "align_to_schema",
-    "delta_available",
     "load_table",
     "load_tables",
     "path_exists",
@@ -32,8 +30,6 @@ __all__ = [
     "read_json",
     "read_parquet",
     "register_views",
-    "upsert_auto",
-    "upsert_delta",
     "upsert_parquet",
     "write_bucketed_table",
     "write_jsonl",

@@ -196,9 +196,10 @@ def invalidate_swapped_path(spark: SparkSession, path: str) -> None:
     the swapped tree: refreshByPath rebuilds such a cache entry
     against the displaced listing, and any later matching plan is
     substituted with it (reads deleted files). Protocol steps must
-    scope their persists to the step that materializes them —
-    ``operators.caching.persist_scope`` — rather than leave them live
-    across a mutation."""
+    therefore collect every plan that reads a store before the
+    store's first mutation (``NearDupIndex._run_batch`` collects its
+    candidates, roster hits and decisions to the driver before it
+    appends), so no persisted plan over the store outlives a swap."""
     spark.catalog.refreshByPath(path)
     try:
         spark._jvm.org.apache.spark.sql.execution.datasources.FileStatusCache.resetForTesting()

@@ -21,28 +21,19 @@ eviction is LRU churn, not a leak of wrong data). ``bench.py`` and the
 pipeline runner call :func:`release_caches` after every query action;
 ``tests/test_caching.py`` asserts the sweep leaves zero persistent RDDs.
 
-THREAD SAFETY (r17, from the r16 advisory): store-protocol steps now
-run on concurrent driver threads (``operators.concurrency.
-run_concurrently``), so the registry is guarded by a lock, and
-:func:`persist_scope` tracks the persists registered by the CURRENT
-THREAD inside the scope (a ``threading.local`` stack) instead of
-slicing the global list — a ``tracked_persist`` from another thread
-landing inside the scope window is no longer swept by the scope exit.
+Store-protocol steps run on concurrent driver threads
+(``operators.concurrency.run_concurrently``), so the registry is
+guarded by a lock.
 """
 
 from __future__ import annotations
 
 import threading
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
 _LOCK = threading.Lock()
 _ACTIVE: list[DataFrame] = []
-# per-thread stack of open persist_scope collectors; InheritableThread
-# children get their own empty stack, which is exactly the isolation
-# the scope semantics need
-_SCOPES = threading.local()
 
 
 def tracked_persist(df: DataFrame, storage_level=None) -> DataFrame:
@@ -50,52 +41,7 @@ def tracked_persist(df: DataFrame, storage_level=None) -> DataFrame:
     persisted = df.persist(storage_level) if storage_level else df.persist()
     with _LOCK:
         _ACTIVE.append(persisted)
-    stack = getattr(_SCOPES, "stack", None)
-    if stack:
-        stack[-1].append(persisted)
     return persisted
-
-
-@contextmanager
-def persist_scope():
-    """Release every :func:`tracked_persist` registered by THIS THREAD
-    inside the scope when it exits — for protocol steps that fully
-    materialize their result (collect / eager localCheckpoint) before
-    returning.
-
-    Why it exists: a library persist that outlives its action is
-    normally just wasted storage (release_caches sweeps it after the
-    query), but inside a MUTATING protocol it is a correctness hazard:
-    a cached plan fragment over a store path pins that path's file
-    listing, and when a later step compacts/swaps the store the
-    CacheManager recache rebuilds the entry against the displaced
-    listing — any later plan that canonically matches the fragment is
-    then silently substituted with a scan of deleted files
-    (FAILED_READ_FILE.FILE_NOT_EXIST; the near-dup ingest→compact→
-    ingest replay hit exactly this once compactions ran concurrently).
-    Scoping the persists to the step that materializes their consumer
-    removes the stale entry before any mutation can race it — and
-    keeps a long-running loop's cache footprint bounded per epoch
-    instead of accumulating until release_caches.
-    """
-    stack = getattr(_SCOPES, "stack", None)
-    if stack is None:
-        stack = []
-        _SCOPES.stack = stack
-    scoped: list[DataFrame] = []
-    stack.append(scoped)
-    try:
-        yield
-    finally:
-        stack.pop()
-        ids = {id(df) for df in scoped}
-        with _LOCK:
-            _ACTIVE[:] = [d for d in _ACTIVE if id(d) not in ids]
-        for df in scoped:
-            try:
-                df.unpersist()
-            except Exception:  # session already stopped
-                pass
 
 
 def untrack(df: DataFrame) -> None:
@@ -104,10 +50,6 @@ def untrack(df: DataFrame) -> None:
     the per-round unpersist in connected_components)."""
     with _LOCK:
         _ACTIVE[:] = [d for d in _ACTIVE if d is not df]
-    stack = getattr(_SCOPES, "stack", None)
-    if stack:
-        for lst in stack:
-            lst[:] = [d for d in lst if d is not df]
 
 
 def release_caches() -> int:

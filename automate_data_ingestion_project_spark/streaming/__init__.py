@@ -5,12 +5,9 @@ from .neardup import stream_neardup_ingest
 from .events import (
     KEYED_EVENT_SCHEMA,
     deduped_events,
-    kafka_available,
-    parse_kafka_events,
     run_available_now,
     sessionized_counts,
     stream_events,
-    stream_events_kafka,
     stream_upsert,
     user_running_totals,
     windowed_event_counts,
@@ -19,12 +16,9 @@ from .events import (
 __all__ = [
     "KEYED_EVENT_SCHEMA",
     "deduped_events",
-    "kafka_available",
-    "parse_kafka_events",
     "run_available_now",
     "sessionized_counts",
     "stream_events",
-    "stream_events_kafka",
     "stream_neardup_ingest",
     "stream_upsert",
     "user_running_totals",

@@ -49,74 +49,6 @@ def stream_events(
     return reader.load()
 
 
-def kafka_available(spark: SparkSession) -> bool:
-    """True iff the ``spark-sql-kafka-0-10`` provider is on the
-    classpath. The connector ships as a separate jar (not in pyspark's
-    default distribution, nor in this container), so the Kafka form of
-    the source is probe-gated the same way the Delta backend is."""
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-            "org.apache.spark.sql.kafka010.KafkaSourceProvider"
-        )
-        return True
-    except Exception:
-        return False
-
-
-def parse_kafka_events(raw: DataFrame) -> DataFrame:
-    """Decode Kafka records into the events shape.
-
-    The Kafka source yields ``key binary, value binary, topic, partition,
-    offset, timestamp, ...``; the event payload is JSON in ``value``.
-    This is plain DataFrame code — identical in batch and streaming — so
-    the decode logic is testable without a broker: feed it a batch frame
-    with the same columns. Rows whose payload fails to parse (or lacks
-    ``ts``) are dropped rather than poisoning the watermark with NULLs.
-    """
-    return (
-        raw.select(
-            F.from_json(F.col("value").cast("string"), EVENT_SCHEMA).alias("e")
-        )
-        .select("e.*")
-        .filter(F.col("ts").isNotNull())
-    )
-
-
-def stream_events_kafka(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "earliest",
-    max_offsets_per_trigger: int | None = None,
-) -> DataFrame:
-    """Kafka-source event stream — the unbounded form of
-    :func:`stream_events`; every downstream operator in this module
-    composes onto it unchanged.
-
-    Scale notes: one Spark task per Kafka partition, so topic partition
-    count is the parallelism knob; ``maxOffsetsPerTrigger`` bounds
-    micro-batch size during backfill so a day of backlog can't produce
-    one giant batch.
-    """
-    if not kafka_available(spark):
-        raise RuntimeError(
-            "Kafka source requires the spark-sql-kafka-0-10 jar on the "
-            "classpath (--packages org.apache.spark:spark-sql-kafka-0-10_"
-            "2.13:<spark-version>); not available in this environment"
-        )
-    reader = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-    )
-    if max_offsets_per_trigger is not None:
-        reader = reader.option(
-            "maxOffsetsPerTrigger", str(max_offsets_per_trigger)
-        )
-    return parse_kafka_events(reader.load())
-
-
 def windowed_event_counts(
     events: DataFrame,
     window: str = "1 hour",

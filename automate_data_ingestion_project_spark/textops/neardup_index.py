@@ -52,7 +52,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
 from ..io.sink import write_bucketed_table
-from ..operators.caching import tracked_persist
+from ..operators.caching import tracked_persist, untrack
 from ..operators.concurrency import run_concurrently
 from .dedup import (
     jaccard_terms,
@@ -179,17 +179,33 @@ class NearDupIndex:
     def write_corpus(docs: DataFrame, dest_root: str) -> None:
         """Write a corpus's index tree under ``dest_root`` (composable
         with :func:`..io.artifacts.build_once` for atomic publication)."""
+        NearDupIndex._write_trees(
+            docs,
+            dest_root,
+            lambda bands: bands.write.mode("overwrite").parquet(
+                os.path.join(dest_root, BANDS_SUBDIR)
+            ),
+        )
+
+    @staticmethod
+    def _write_trees(docs: DataFrame, root: str, write_bands) -> None:
+        """The one build body of both layouts: write the shingle and
+        roster trees under ``root`` and hand the band table to
+        ``write_bands``. The shingle persist feeds the shingle write
+        and the bands; it has no consumer after the writes and is
+        released whichever way they exit."""
         rows = tracked_persist(shingle_rows(docs))
-        bands = lsh_band_keys(minhash_signatures_rows(rows))
-        rows.write.mode("overwrite").parquet(
-            os.path.join(dest_root, ROWS_SUBDIR)
-        )
-        bands.write.mode("overwrite").parquet(
-            os.path.join(dest_root, BANDS_SUBDIR)
-        )
-        content_hashes(docs).write.mode("overwrite").parquet(
-            os.path.join(dest_root, HASHES_SUBDIR)
-        )
+        try:
+            rows.write.mode("overwrite").parquet(
+                os.path.join(root, ROWS_SUBDIR)
+            )
+            write_bands(lsh_band_keys(minhash_signatures_rows(rows)))
+            content_hashes(docs).write.mode("overwrite").parquet(
+                os.path.join(root, HASHES_SUBDIR)
+            )
+        finally:
+            rows.unpersist()
+            untrack(rows)
 
     @classmethod
     def build(
@@ -206,31 +222,18 @@ class NearDupIndex:
         build time and never reshuffled by any later probe."""
         if bucket_bands is None:
             cls.write_corpus(docs, root)
-            return cls(spark, root)
-        rows = tracked_persist(shingle_rows(docs))
-        try:
-            bands = lsh_band_keys(minhash_signatures_rows(rows))
-            rows.write.mode("overwrite").parquet(
-                os.path.join(root, ROWS_SUBDIR)
+        else:
+            cls._write_trees(
+                docs,
+                root,
+                lambda bands: write_bucketed_table(
+                    bands,
+                    _bands_table_name(root),
+                    "band_key",
+                    bucket_bands,
+                    sort_col="band_key",
+                ),
             )
-            content_hashes(docs).write.mode("overwrite").parquet(
-                os.path.join(root, HASHES_SUBDIR)
-            )
-            write_bucketed_table(
-                bands,
-                _bands_table_name(root),
-                "band_key",
-                bucket_bands,
-                sort_col="band_key",
-            )
-        finally:
-            # both writes are done — the persist has no further consumer
-            # (mirrors ingest_batch's cleanup; without it every bucketed
-            # build leaks one live persist + registry entry)
-            from ..operators.caching import untrack
-
-            rows.unpersist()
-            untrack(rows)
         return cls(spark, root, bucket_bands=bucket_bands)
 
     # -- reads (re-read per call so appends are visible) -------------------
@@ -473,8 +476,6 @@ class NearDupIndex:
                 )
             return decisions
         finally:
-            from ..operators.caching import untrack
-
             docs.unpersist()
             untrack(docs)
 

@@ -39,28 +39,9 @@ def main() -> int:
     from automate_data_ingestion_project_spark.operators.caching import (
         release_caches,
     )
-    from automate_data_ingestion_project_spark.analytics.dedup import (
-        corpus_neardup_index,
-        minhash_pairs_evidence,
-    )
-    from automate_data_ingestion_project_spark.analytics.ivf import ivf_cell_table
-    from automate_data_ingestion_project_spark.analytics.ivf_train import (
-        ivf_trained_artifact,
-    )
-    from automate_data_ingestion_project_spark.analytics.load import (
-        zorder_pruned_scan as _zorder_query,
-    )
-    from automate_data_ingestion_project_spark.analytics.pq_train import (
-        _train as pq_train_artifact,
-    )
+    from bench import prebuild_artifacts
 
-    corpus_neardup_index(spark, sf_dir)
-    minhash_pairs_evidence(spark, sf_dir)
-    pq_train_artifact(spark, sf_dir)
-    ivf_cell_table(spark, sf_dir)
-    ivf_trained_artifact(spark, sf_dir)
-    _zorder_query(spark, sf_dir)
-    release_caches()
+    prebuild_artifacts(spark, sf_dir)
 
     def canary() -> float:
         c = float("inf")

@@ -99,42 +99,3 @@ def test_tracked_persist_returns_usable_df_and_releases(spark):
     assert _n_persistent(spark) == base
     # release on an empty registry is a no-op
     assert release_caches() == 0
-
-
-def test_persist_scope_does_not_sweep_other_threads_persists(spark):
-    """Regression (r16 advisory, low): persist_scope used to scope by
-    slicing the global registry, so a tracked_persist from ANOTHER
-    driver thread landing inside the scope window was swept
-    (unpersisted) by the scope exit. The scope now collects only the
-    persists registered by its own thread."""
-    import threading
-
-    from automate_data_ingestion_project_spark.operators.caching import (
-        persist_scope,
-    )
-
-    release_caches()
-    scope_open = threading.Event()
-    other_registered = threading.Event()
-    foreign: list = []
-
-    def other_thread():
-        scope_open.wait(10)
-        foreign.append(tracked_persist(spark.range(50)))
-        foreign[0].count()
-        other_registered.set()
-
-    t = threading.Thread(target=other_thread)
-    t.start()
-    with persist_scope():
-        mine = tracked_persist(spark.range(60))
-        mine.count()
-        scope_open.set()
-        assert other_registered.wait(10)
-    t.join(10)
-    # the scope released ITS persist...
-    assert mine.storageLevel.useMemory is False
-    # ...but not the other thread's, which stays live until the
-    # caller's release_caches sweep
-    assert foreign[0].storageLevel.useMemory is True
-    assert release_caches() >= 1

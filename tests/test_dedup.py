@@ -525,42 +525,50 @@ def test_roster_is_append_commit_marker(spark, tmp_path, monkeypatch):
     assert d2 == {20: True}
 
 
-def test_bucketed_build_releases_its_persist(spark, tmp_path):
-    """NearDupIndex.build(bucket_bands=n) must not leave its shingle
-    persist live/tracked after both writes complete (the same per-call
-    leak ingest_batch's finally block prevents)."""
+def _assert_build_adds_no_persist(spark, root, bucket_bands):
+    """NearDupIndex.build must not leave its shingle persist live or
+    tracked after its writes complete (the same per-call leak
+    ingest_batch's finally block prevents)."""
     from automate_data_ingestion_project_spark.operators.caching import (
         _ACTIVE,
+        release_caches,
     )
     from automate_data_ingestion_project_spark.textops.neardup_index import (
         NearDupIndex,
     )
 
-    # delta-based: earlier tests in the shared session may legitimately
-    # hold live persists; build() must simply not ADD one. Compare RDD
-    # ID SETS, not counts: the ContextCleaner unpersists out-of-scope
-    # localCheckpoint RDDs from EARLIER tests asynchronously, and a
-    # removal landing inside this window shrank a count-based check
-    # into a false failure — new ids are the leak signal, removals are
-    # irrelevant.
+    # Compare RDD ID SETS, not counts: the ContextCleaner unpersists
+    # out-of-scope localCheckpoint RDDs from EARLIER tests
+    # asynchronously, and a removal landing inside this window shrank a
+    # count-based check into a false failure — new ids are the leak
+    # signal, removals are irrelevant.
     def _persisted_ids():
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
         return {int(i) for i in jmap.keySet().toArray()}
 
-    tracked_before = len(_ACTIVE)
+    release_caches()
     ids_before = _persisted_ids()
     corpus = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog today")],
         "doc_id long, text string",
     )
-    index = NearDupIndex.build(
-        spark, corpus, str(tmp_path / "idx"), bucket_bands=4
-    )
+    index = NearDupIndex.build(spark, corpus, root, bucket_bands=bucket_bands)
     try:
-        assert len(_ACTIVE) == tracked_before
+        assert len(_ACTIVE) == 0
         assert _persisted_ids() <= ids_before
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {index.bands_table}")
+        if index.bands_table:
+            spark.sql(f"DROP TABLE IF EXISTS {index.bands_table}")
+
+
+def test_bucketed_build_releases_its_persist(spark, tmp_path):
+    _assert_build_adds_no_persist(spark, str(tmp_path / "idx"), 4)
+
+
+def test_plain_build_releases_its_persist(spark, tmp_path):
+    """The plain layout (also the ``corpus_neardup_index`` artifact
+    build, through ``write_corpus``) releases its persist too."""
+    _assert_build_adds_no_persist(spark, str(tmp_path / "idx"), None)
 
 
 def test_index_compaction_collapses_files_and_preserves_reads(spark, tmp_path):

@@ -129,60 +129,6 @@ def test_watermark_present_in_plan(spark, events_dir):
     assert "EventTimeWatermark" in stream._jdf.queryExecution().analyzed().toString()
 
 
-def test_kafka_decode_is_batch_testable(spark):
-    """parse_kafka_events is pure DataFrame code: run it on a batch frame
-    shaped like the Kafka source's output (value binary + metadata) and
-    the full downstream operator chain composes onto the result."""
-    from automate_data_ingestion_project_spark.streaming import (
-        parse_kafka_events,
-        windowed_event_counts,
-    )
-
-    payloads = [
-        b'{"ts": "2024-01-01T00:10:00", "event_type": "click", "user_id": 7}',
-        b'{"ts": "2024-01-01T00:20:00", "event_type": "click", "user_id": 8}',
-        b'{"ts": "2024-01-01T01:05:00", "event_type": "view", "user_id": 7}',
-        b"not json at all",  # dropped, not a poison row
-        b'{"event_type": "view", "user_id": 9}',  # no ts -> dropped
-    ]
-    raw = spark.createDataFrame(
-        [(None, v, "events", 0, i) for i, v in enumerate(payloads)],
-        "key binary, value binary, topic string, partition int, offset long",
-    )
-    parsed = parse_kafka_events(raw)
-    assert parsed.schema.simpleString() == (
-        "struct<ts:timestamp,event_type:string,user_id:bigint>"
-    )
-    rows = sorted(
-        (r.event_type, r.user_id) for r in parsed.collect()
-    )
-    assert rows == [("click", 7), ("click", 8), ("view", 7)]
-    # the watermarked windowed agg composes on the decoded frame (batch
-    # groupBy-window here; identical code path streaming-side)
-    counts = {
-        (r.window_start.isoformat(), r.event_type): r.n_events
-        for r in windowed_event_counts(parsed).collect()
-    }
-    assert counts == {
-        ("2024-01-01T00:00:00", "click"): 2,
-        ("2024-01-01T01:00:00", "view"): 1,
-    }
-
-
-def test_kafka_source_gated_on_classpath(spark):
-    from automate_data_ingestion_project_spark.streaming import (
-        kafka_available,
-        stream_events_kafka,
-    )
-
-    if kafka_available(spark):
-        df = stream_events_kafka(spark, "localhost:9092", "events")
-        assert df.isStreaming
-    else:
-        with pytest.raises(RuntimeError, match="spark-sql-kafka"):
-            stream_events_kafka(spark, "localhost:9092", "events")
-
-
 def test_run_available_now_restores_shuffle_partitions(spark, events_dir):
     """The scoped state-store sizing must not leak: the session's
     shuffle-partition setting is restored after the replay (including
