@@ -70,15 +70,49 @@ _SMOKE_SF_DIR = "/root/testdata/sf0.001"
 # set (it checks the first 50 in this ordering; the count rotates
 # round to round). Order the registry so the weakest driver evidence
 # comes first:
-# (1) the 28 rows whose behavior-bearing code changed after the r17
-# drive: every store, ingest-replay, change-feed and near-dup row (the
-# one ledger-commit primitive, one on-disk format per store, the
-# driver-side near-dup decisions) plus the quantize family;
-# (2) the 22 stalest rows — r13-vintage evidence in the
-# CORRECTNESS_r{N}.json hash_match history, registration order.
-# 28 + 22 = 50 fills the window.
+# (1) the 32 rows whose builder calls `functions.dsum`, in registration
+# order: their sums moved from a per-row decimal cast to exact
+# fixed-point limb arithmetic after the r17 drive;
+# (2) the first 18 rows of the previous window's head — store,
+# ingest-replay, change-feed and near-dup rows whose commit and
+# decision paths changed after the r17 drive.
+# 32 + 18 = 50 fills the window. The rest of that head (from
+# `neardup_store_delete` on, then the r13-vintage rows) leads the next.
 _CHECK_FIRST = [
-    # (1) behavior-bearing code changed after the r17 drive
+    # (1) rows that sum through `functions.dsum`
+    "orders_by_month",
+    "events_weekly_heatmap",
+    "incremental_daily_rollup",
+    "customer_value_quartiles",
+    "skew_salted_join",
+    "events_hypertable_rollup",
+    "pricing_summary",
+    "revenue_by_nation",
+    "top_brands_by_quantity",
+    "orders_per_year",
+    "sales_rollup",
+    "orders_monthly_gapfill",
+    "nation_revenue_share",
+    "promo_revenue_share",
+    "nation_revenue_pareto",
+    "sales_cube",
+    "sales_grouping_sets",
+    "events_value_histogram",
+    "small_qty_revenue_by_brand",
+    "important_revenue_nations",
+    "big_ticket_orders",
+    "disjunctive_promo_revenue",
+    "local_supplier_revenue",
+    "shipping_priority_topk",
+    "volume_shipping_pairs",
+    "nation_market_share",
+    "returned_item_losses",
+    "lapsed_customer_balance",
+    "discount_revenue_delta",
+    "top_supplier_revenue",
+    "nation_profit_by_year",
+    "promotable_part_suppliers",
+    # (2) the rest of the previous head (store and near-dup paths)
     "ann_ivf_ingest_replay",
     "stream_ann_ivf_ingest_replay",
     "ivf_store_compaction",
@@ -97,39 +131,6 @@ _CHECK_FIRST = [
     "neardup_ingest_replay",
     "stream_neardup_ingest_replay",
     "neardup_compacted_ingest_replay",
-    "neardup_store_delete",
-    "ann_ivfpq_ingest_replay",
-    "stream_ann_ivfpq_ingest_replay",
-    "ivfpq_store_delete",
-    "neardup_blast_radius",
-    "neardup_triangles",
-    "label_centroids",
-    "centroid_purity",
-    "kmeans_step",
-    "semantic_dedup_clusters",
-    # (2) the 22 stalest rows (r13-vintage evidence)
-    "peak_concurrent_sessions",
-    "events_variant_props",
-    "ann_ivfpq_refined_topk",
-    "ann_ivfpq_refined_recall_eval",
-    "pq_train_distortion",
-    "ann_pq_trained_recall_eval",
-    "ivf_train_distortion",
-    "ann_ivf_trained_recall_eval",
-    "table_profile_approx",
-    "heavy_hitters_sketch",
-    "quantile_sketch_calibration",
-    "pagerank_step",
-    "orc_roundtrip_supplier",
-    "xml_roundtrip_part",
-    "stream_stream_join",
-    "stream_upsert_foreachbatch",
-    "stream_late_data_drop",
-    "pii_redaction",
-    "orders_trailing_30d_revenue",
-    "promo_revenue_share",
-    "sales_grouping_sets",
-    "median_order_by_nation",
 ]
 
 def _ordered_specs():

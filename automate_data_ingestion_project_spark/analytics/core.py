@@ -13,7 +13,7 @@ Scale notes (100 TB): every query here is a single scan → (optional
 shuffle) → agg pipeline. Filters and projections are expressed on base
 columns so Catalyst pushes them into the parquet scan; aggregations are
 partial (map-side) before the shuffle; no driver-side loops; double
-sums use exact decimal accumulation (see ``functions.dsum``) so results
+sums use exact fixed-point accumulation (see ``functions.dsum``) so results
 are reproducible regardless of partial-agg order.
 """
 

@@ -180,7 +180,7 @@ def incremental_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     overwrite in `upsert_parquet`), never the table. Day-partitioned
     arrival means every day is wholly owned by one batch, which is what
     makes delta-aggregation exact; late data for a closed day re-upserts
-    just that day. Sums accumulate in DECIMAL so batch boundaries can't
+    just that day. Sums accumulate exactly so batch boundaries can't
     change low bits vs the one-shot oracle.
     """
     from ..io import load_table

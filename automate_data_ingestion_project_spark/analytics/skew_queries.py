@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import dsum_expr
+from ..functions import dsum, dsum_expr
 from ..io import load_table
 from ..operators.skew import salted_join, salted_sum_count
 from .registry import register
@@ -69,15 +69,13 @@ def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_partkey").alias("p_partkey"),
         "l_orderkey",
-        (F.col("l_extendedprice") * (1 - F.col("l_discount")))
-        .cast(_DEC)
-        .alias("_rev"),
+        (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("_rev"),
     )
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     # salt from the ORDER key — varies within a hot part key, so the
     # hot key's rows actually spread over the 8 salt tasks
     joined = salted_join(li, part, key="p_partkey", salt_from="l_orderkey", n_salts=8)
     return joined.groupBy("p_brand").agg(
-        F.sum("_rev").cast("double").alias("revenue"),
+        dsum("_rev").alias("revenue"),
         F.count("*").alias("n_items"),
     )

@@ -291,7 +291,7 @@ def nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``revenue / SUM(revenue) OVER ()`` — an empty-frame global window
     that drags every row to one task; here the total is ONE scalar
     aggregate broadcast back over the (already tiny) per-nation
-    aggregate. Both sides divide the identical decimal-accumulated
+    aggregate. Both sides divide the identical exactly-accumulated
     doubles, so shares are bit-stable.
     """
     li = load_table(spark, sf_dir, "lineitem")
@@ -381,7 +381,7 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     forced broadcast would override ``autoBroadcastJoinThreshold`` and
     OOM the driver at scale. AQE picks broadcast when part actually
     fits and sort-merge when it doesn't. The fact shuffles once on the
-    group key, and both sums accumulate in DECIMAL
+    group key, and both sums accumulate exactly
     (:func:`..functions.dsum`) so 1000-way partial-aggregation order
     cannot flap the ratio's low bits.
     """
@@ -517,7 +517,7 @@ def nation_revenue_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     total). The ordered cumulative window runs over the POST-aggregation
     relation — |nations| rows at any corpus size, so the single-task
     window is bounded by the dimension, not the data (same argument as
-    the rolling-revenue frame). The running sum adds decimal-exact
+    the rolling-revenue frame). The running sum adds exactly-summed
     doubles in a deterministic ROWS order, so both engines fold the
     identical operand sequence.
     """

@@ -16,7 +16,7 @@ supplier / part scale with the data and are LEFT TO AQE, which
 broadcasts them at fixture scale and switches to key-partitioned joins
 when they outgrow the threshold.
 
-Float discipline: all revenue/balance sums accumulate in DECIMAL
+Float discipline: all revenue/balance sums accumulate exactly
 (:func:`..functions.dsum`) — mandatory here because Q3/Q10 ORDER BY the
 aggregate and LIMIT, so a low-bit flap would change WHICH rows survive,
 not just their values.
@@ -69,7 +69,7 @@ def shipping_priority_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     executes as TakeOrderedAndProject (per-partition heaps + one k-row
     merge), never a full sort of the aggregate. LIMIT makes membership
     order-sensitive, so ties break on (revenue DESC, orderkey) and
-    revenue accumulates in DECIMAL — bit-stable membership.
+    revenue accumulates exactly — bit-stable membership.
     """
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -295,7 +295,7 @@ def returned_item_losses(spark: SparkSession, sf_dir: str) -> DataFrame:
     KEY (they are functionally dependent on custkey, so group
     cardinality is unchanged and no second join is needed to re-attach
     them). nation broadcasts; customer is SF-scaled — no hint. Top-20
-    via TakeOrderedAndProject with DECIMAL-stable (revenue, custkey)
+    via TakeOrderedAndProject with bit-stable (revenue, custkey)
     ordering.
     """
     cust = load_table(spark, sf_dir, "customer").select(
@@ -367,8 +367,8 @@ def lapsed_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the threshold is a 1-row aggregate of the customer
     scan crossJoin-broadcast back (the Q11 treatment); the NOT EXISTS
     is one anti-join against the date-pruned orders scan — never a
-    per-customer probe. The threshold comparison accumulates in
-    DECIMAL so membership can't flap at the boundary.
+    per-customer probe. The threshold comparison accumulates
+    exactly so membership can't flap at the boundary.
     """
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_acctbal", "c_nationkey"
@@ -515,7 +515,7 @@ def top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier-key shuffle run once, not twice (a naive scalar subquery
     re-executes the revenue aggregation for the threshold). Equality
     against the max is exact because both sides accumulate the SAME
-    DECIMAL sums (:func:`..functions.dsum`) — a double accumulation
+    exact sums (:func:`..functions.dsum`) — a double accumulation
     here could drop the true argmax on a low-bit flap.
 
     Scale shape: the quarter predicate reaches the lineitem scan

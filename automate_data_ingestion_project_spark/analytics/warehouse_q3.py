@@ -23,8 +23,8 @@ hash match proves the rewrite, not just the arithmetic.
 
 Hint policy and float discipline follow ``warehouse_q2.py``: only
 fixed-size-by-construction relations get broadcast hints (nation; the
-rest is AQE's call), and every revenue/threshold sum accumulates in
-DECIMAL (:func:`..functions.dsum`) because Q20's threshold decides
+rest is AQE's call), and every revenue/threshold sum accumulates
+exactly (:func:`..functions.dsum`) because Q20's threshold decides
 MEMBERSHIP — a low-bit flap would change which suppliers qualify.
 """
 
@@ -75,7 +75,7 @@ def nation_profit_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the part name filter reaches the part scan and the
     join prunes the fact side to matching parts FIRST (the selective
     arm leads); nation broadcasts by hint (25 rows by construction),
-    part/supplier are AQE's call; profit accumulates in DECIMAL. The
+    part/supplier are AQE's call; profit accumulates exactly. The
     grouping key (nation, year) is tiny, so the final aggregate is one
     narrow exchange over partial aggregates."""
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -209,7 +209,7 @@ def promotable_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied before it (the selective arm first), and both the supplier
     membership and the per-supplier part count come from that single
     aggregate — no per-row subquery probes, no second scan. The
-    threshold sum accumulates in DECIMAL because it decides MEMBERSHIP.
+    threshold sum accumulates exactly because it decides MEMBERSHIP.
     """
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_quantity", "l_shipdate"

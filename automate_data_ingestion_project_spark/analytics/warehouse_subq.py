@@ -18,7 +18,7 @@ of a per-row re-execution:
   deterministic form; ``min_by`` flaps under ties).
 
 Float discipline: every aggregate a boundary predicate later compares
-against accumulates in DECIMAL (:func:`..functions.dsum`) so 1000-way
+against accumulates exactly (:func:`..functions.dsum`) so 1000-way
 partial-aggregation order cannot flip a row across the threshold.
 """
 
@@ -108,7 +108,7 @@ def small_qty_revenue_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate is the (small) probe side. ``part`` is SF-scaled (SF x
     200k rows), so it carries NO broadcast hint: AQE broadcasts it at
     fixture scale and switches to a key-partitioned join at 100 TB.
-    The average accumulates in DECIMAL (identical expression in the
+    The average accumulates exactly (identical expression in the
     oracle) so the `< 0.5*avg` boundary cannot flip under partial-agg
     reordering.
     """
@@ -161,8 +161,8 @@ def important_revenue_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     global threshold is a 1-row aggregate OF THAT RELATION crossJoin-
     broadcast back onto it — the star-join revenue scan runs once, not
     twice (the naive scalar-subquery plan re-executes the whole join
-    tree for the threshold). Both aggregate levels accumulate in
-    DECIMAL so the `>` boundary is stable.
+    tree for the threshold). Both aggregate levels accumulate
+    exactly so the `>` boundary is stable.
 
     Hint policy: only fixed-size relations are hinted — nation (25
     rows) and the 1-row threshold aggregate. customer is SF-scaled so

@@ -65,6 +65,36 @@ def test_aggregations_are_partial_then_final(spark, sf_dir):
     assert "partial_" in plan  # map-side combine before the shuffle
 
 
+def _plan_nodes(node):
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def test_pricing_summary_sums_fixed_point_longs(spark, sf_dir):
+    """`dsum` accumulates integer limbs: no row is cast to a decimal, and
+    the map-side aggregate's buffers are longs (plus try_sum's isEmpty
+    flags) — no BigDecimal per row, no decimal or double buffer."""
+    df = entrymod.queries()["pricing_summary"](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan()
+    assert "decimal(27,6)" not in plan.toString()
+    partial = [
+        n
+        for n in _plan_nodes(plan.inputPlan())
+        if n.nodeName() == "HashAggregate" and "partial_" in n.simpleString(1000)
+    ]
+    assert len(partial) == 1
+    out = partial[0].output()
+    buffers = [
+        (a.name(), a.dataType().simpleString())
+        for a in (out.apply(i) for i in range(out.size()))
+        if a.name() not in ("l_returnflag", "l_linestatus")
+    ]
+    assert {t for n, t in buffers if n == "sum"} == {"bigint"}, buffers
+    assert {t for _, t in buffers} == {"bigint", "boolean"}, buffers
+
+
 def test_bucketed_join_has_no_shuffle(spark, sf_dir):
     """Two tables bucketed on the join key: the join plan must contain
     NO Exchange — the co-location claim, verified."""

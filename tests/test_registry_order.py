@@ -2,51 +2,49 @@
 every _CHECK_FIRST name must resolve to a registered query (a typo
 silently demotes that query to registration order and wastes the
 round's check slot), the ordered registry must be duplicate-free, and
-the window composition must hold: first the 28 rows whose
-behavior-bearing code changed after the r17 drive (every store,
-ingest-replay, change-feed and near-dup row, plus the quantize
-family), then the 22 stalest rows — r13-vintage evidence in the
-CORRECTNESS_r{N}.json hash_match history, in registration order."""
+the window composition must hold: first the 32 rows whose builder calls
+`functions.dsum` (their sums moved to exact fixed-point limb
+arithmetic after the r17 drive), in registration order, then the first
+18 rows of the previous window's head — store, ingest-replay,
+change-feed and near-dup rows whose commit and decision paths changed
+after the r17 drive."""
 
-import fnmatch
+import inspect
+import re
 
 import __spark_entry__ as entrymod
 from automate_data_ingestion_project_spark.analytics import QUERIES
 
-CODE_TOUCHED_PATTERNS = ("*_store_*", "*_ingest_replay", "cdf_*", "*neardup*")
-QUANTIZE_FAMILY = {
-    "label_centroids",
-    "centroid_purity",
-    "kmeans_step",
-    "semantic_dedup_clusters",
-}
-
-STALEST_TAIL = [
-    # the first 22 r13-vintage rows in registration order; the other 16
-    # r13 rows lead the next window
-    "peak_concurrent_sessions",
-    "events_variant_props",
-    "ann_ivfpq_refined_topk",
-    "ann_ivfpq_refined_recall_eval",
-    "pq_train_distortion",
-    "ann_pq_trained_recall_eval",
-    "ivf_train_distortion",
-    "ann_ivf_trained_recall_eval",
-    "table_profile_approx",
-    "heavy_hitters_sketch",
-    "quantile_sketch_calibration",
-    "pagerank_step",
-    "orc_roundtrip_supplier",
-    "xml_roundtrip_part",
-    "stream_stream_join",
-    "stream_upsert_foreachbatch",
-    "stream_late_data_drop",
-    "pii_redaction",
-    "orders_trailing_30d_revenue",
-    "promo_revenue_share",
-    "sales_grouping_sets",
-    "median_order_by_nation",
+PREVIOUS_HEAD = [
+    # the first 18 rows of the previous window; the rest of it (from
+    # neardup_store_delete on, then the r13-vintage rows) leads the next
+    "ann_ivf_ingest_replay",
+    "stream_ann_ivf_ingest_replay",
+    "ivf_store_compaction",
+    "ivf_store_delete",
+    "shard_store_ledger_checkpoint",
+    "shard_store_compaction",
+    "shard_store_asof",
+    "shard_store_asof_compacted",
+    "shard_store_delete",
+    "shard_store_asof_erasure",
+    "shard_store_changes",
+    "stream_shard_store_delete",
+    "cdf_incremental_consumer",
+    "cdf_consumer_erasure_propagation",
+    "incremental_neardup_filter",
+    "neardup_ingest_replay",
+    "stream_neardup_ingest_replay",
+    "neardup_compacted_ingest_replay",
 ]
+
+# a call of `dsum` (or the `_dsum` import alias), not of `dsum_expr`
+_DSUM_CALL = re.compile(r"\b_?dsum\(")
+
+
+def _calls_dsum(name: str) -> bool:
+    return bool(_DSUM_CALL.search(inspect.getsource(QUERIES[name].fn)))
+
 
 def test_check_first_names_all_registered():
     missing = [n for n in entrymod._CHECK_FIRST if n not in QUERIES]
@@ -59,16 +57,12 @@ def test_ordered_registry_has_no_duplicates_and_covers_everything():
     assert set(names) == set(QUERIES)
 
 
-def test_round17_window_composition():
+def test_driver_window_composition():
     first50 = list(entrymod.queries())[:50]
-    code_touched = {
-        n
-        for n in QUERIES
-        if any(fnmatch.fnmatch(n, p) for p in CODE_TOUCHED_PATTERNS)
-    } | QUANTIZE_FAMILY
-    assert len(code_touched) == 28
-    assert set(first50[:28]) == code_touched
-    assert first50[28:] == STALEST_TAIL and len(first50) == 50
+    dsum_rows = [n for n in QUERIES if _calls_dsum(n)]  # registration order
+    assert len(dsum_rows) == 32
+    assert first50[:32] == dsum_rows
+    assert first50[32:] == PREVIOUS_HEAD and len(first50) == 50
 
 def test_oracles_cover_every_query():
     q = entrymod.queries()
