@@ -70,16 +70,37 @@ _SMOKE_SF_DIR = "/root/testdata/sf0.001"
 # set (it checks the first 50 in this ordering; the count rotates
 # round to round). Order the registry so the weakest driver evidence
 # comes first:
-# (1) the 32 rows whose builder calls `functions.dsum`, in registration
-# order: their sums moved from a per-row decimal cast to exact
-# fixed-point limb arithmetic after the r17 drive;
-# (2) the first 18 rows of the previous window's head — store,
-# ingest-replay, change-feed and near-dup rows whose commit and
-# decision paths changed after the r17 drive.
-# 32 + 18 = 50 fills the window. The rest of that head (from
-# `neardup_store_delete` on, then the r13-vintage rows) leads the next.
+# (1) the 16 rows whose code changed after the dsum rewrite, in
+# registration order: the streaming rows, now run by the one
+# micro-batch drain (`streaming.events.drain_available_now`); the
+# near-dup batch replays, which share its shuffle-width constant; and
+# `event_sessions_udtf`, fed by an explicit-width repartition in place
+# of an eager checkpoint;
+# (2) the previous order: the 32 rows whose builder calls
+# `functions.dsum`, then the store, ingest-replay, change-feed and
+# near-dup rows of the window before, less the rows already in (1).
+# 16 + 34 = 50 fills the window. The rest of (2), from
+# `ivf_store_delete` on, leads the next, then the ivfpq and near-dup
+# graph rows, the quantize family and the r13-vintage rows.
 _CHECK_FIRST = [
-    # (1) rows that sum through `functions.dsum`
+    # (1) rows on the one micro-batch drain, and event_sessions_udtf
+    "stream_ann_ivf_ingest_replay",
+    "stream_shard_export",
+    "stream_shard_store_delete",
+    "neardup_ingest_replay",
+    "stream_neardup_ingest_replay",
+    "neardup_compacted_ingest_replay",
+    "neardup_store_delete",
+    "event_sessions_udtf",
+    "stream_ann_ivfpq_ingest_replay",
+    "stream_windowed_counts",
+    "stream_session_counts",
+    "stream_dedup_events",
+    "stream_stateful_totals",
+    "stream_stream_join",
+    "stream_upsert_foreachbatch",
+    "stream_late_data_drop",
+    # (2) rows that sum through `functions.dsum`
     "orders_by_month",
     "events_weekly_heatmap",
     "incremental_daily_rollup",
@@ -112,9 +133,8 @@ _CHECK_FIRST = [
     "top_supplier_revenue",
     "nation_profit_by_year",
     "promotable_part_suppliers",
-    # (2) the rest of the previous head (store and near-dup paths)
+    # ... then the rest of the previous head (store and near-dup paths)
     "ann_ivf_ingest_replay",
-    "stream_ann_ivf_ingest_replay",
     "ivf_store_compaction",
     "ivf_store_delete",
     "shard_store_ledger_checkpoint",
@@ -124,13 +144,9 @@ _CHECK_FIRST = [
     "shard_store_delete",
     "shard_store_asof_erasure",
     "shard_store_changes",
-    "stream_shard_store_delete",
     "cdf_incremental_consumer",
     "cdf_consumer_erasure_propagation",
     "incremental_neardup_filter",
-    "neardup_ingest_replay",
-    "stream_neardup_ingest_replay",
-    "neardup_compacted_ingest_replay",
 ]
 
 def _ordered_specs():

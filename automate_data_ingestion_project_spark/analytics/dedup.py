@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..io.maintenance import session_conf_scope
+from ..streaming.events import DRAIN_SHUFFLE_PARTITIONS
 from ..textops.dedup import (
     A_COEF,
     B_COEF,
@@ -926,23 +928,19 @@ def neardup_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     a table snapshot the same way)."""
     index = _clone_replay_index(spark, sf_dir, "neardup_ingest_replay")
     b1, b2 = _replay_batches(load_table(spark, sf_dir, "documents"))
-    # Scope shuffle parallelism to the BATCH size for the replay run —
-    # the same deployment knob run_available_now documents for the
-    # streaming harnesses: each ingest step chains several shuffles
-    # over a few-hundred-row batch, and 32-partition exchanges pay
-    # task/commit overhead on kilobytes (measured 7.0 s → 5.2 s at
-    # sf0.1 with 8). Partitioning never changes keyed results; a real
-    # deployment raises it with the batch volume. ingest_batch is eager
+    # The replay runs at the streaming drain's shuffle width
+    # (streaming.events.DRAIN_SHUFFLE_PARTITIONS), so it and
+    # stream_neardup_ingest_replay execute the same ingest: each step
+    # chains several shuffles over a few-hundred-row batch, and
+    # 32-partition exchanges pay task/commit overhead on kilobytes
+    # (measured 7.0 s → 5.2 s at sf0.1 with 8). ingest_batch is eager
     # (its decisions come back as a driver-built LocalRelation), so the
-    # scoped value governs all of its execution.
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, "8")
-    try:
+    # scoped width governs all of its execution.
+    with session_conf_scope(
+        spark, "spark.sql.shuffle.partitions", DRAIN_SHUFFLE_PARTITIONS
+    ):
         d1 = index.ingest_batch(b1).withColumn("batch_no", F.lit(1).cast("int"))
         d2 = index.ingest_batch(b2).withColumn("batch_no", F.lit(2).cast("int"))
-    finally:
-        spark.conf.set(conf_key, prior)
     return d1.unionByName(d2).select(
         "batch_no", "batch_id", "n_candidates", "n_verified_dups", "is_near_dup"
     )
@@ -993,7 +991,6 @@ def stream_neardup_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         index,
         os.path.join(root, "decisions"),
         os.path.join(root, "ckpt"),
-        shuffle_partitions=8,
     )
     return ledger.select(
         F.when(F.col("batch_id") < 400000, 1).otherwise(2).cast("int").alias(
@@ -1026,15 +1023,12 @@ def neardup_compacted_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFra
     is the whole contract of a maintenance op."""
     index = _clone_replay_index(spark, sf_dir, "neardup_compacted_replay")
     b1, b2 = _replay_batches(load_table(spark, sf_dir, "documents"))
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, "8")
-    try:
+    with session_conf_scope(
+        spark, "spark.sql.shuffle.partitions", DRAIN_SHUFFLE_PARTITIONS
+    ):
         d1 = index.ingest_batch(b1).withColumn("batch_no", F.lit(1).cast("int"))
         index.compact()
         d2 = index.ingest_batch(b2).withColumn("batch_no", F.lit(2).cast("int"))
-    finally:
-        spark.conf.set(conf_key, prior)
     return d1.unionByName(d2).select(
         "batch_no", "batch_id", "n_candidates", "n_verified_dups", "is_near_dup"
     )
@@ -1072,15 +1066,12 @@ def neardup_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     index.delete_docs(dead, 0)
     index.delete_docs(dead, 0)  # replayed tombstone batch: no-op
     b1, b2 = _replay_batches(docs)
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, "8")
-    try:
+    with session_conf_scope(
+        spark, "spark.sql.shuffle.partitions", DRAIN_SHUFFLE_PARTITIONS
+    ):
         d1 = index.ingest_batch(b1).withColumn("batch_no", F.lit(1).cast("int"))
         index.compact()  # physical erasure between the batches
         d2 = index.ingest_batch(b2).withColumn("batch_no", F.lit(2).cast("int"))
-    finally:
-        spark.conf.set(conf_key, prior)
     return d1.unionByName(d2).select(
         "batch_no", "batch_id", "n_candidates", "n_verified_dups", "is_near_dup"
     )

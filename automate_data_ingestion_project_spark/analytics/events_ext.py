@@ -377,32 +377,27 @@ def event_sessions_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield self._flush()
 
     spark.udtf.register("sessionize_events", Sessionize)
-    ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
+    # The UDTF's PARTITION BY alone plans a REPARTITION_BY_COL exchange,
+    # which AQE coalesces BY BYTES; a row-at-a-time Python state
+    # machine's cost is per ROW, so the small shuffle coalesced to 2-3
+    # partitions and serialized the Python work (measured 2.6 → 1.5 s
+    # at sf0.1 on local[32] once coalescing was off). An explicit-width
+    # repartition is REPARTITION_BY_NUM, which AQE never coalesces. At
+    # the session's shuffle width its hash partitioning on user_id
+    # already satisfies the PARTITION BY (the analyzer's
+    # ``user_id AS partition_by_0`` projects it through), so
+    # EnsureRequirements drops the UDTF's own exchange and ONE
+    # full-width shuffle feeds the UDTF. At any other width both
+    # exchanges stay and the upper one coalesces again.
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     view = "events_for_udtf_sessions"
-    ev.createOrReplaceTempView(view)
-    out = spark.sql(
+    load_table(spark, sf_dir, "events").select(
+        "user_id", "ts", "event_id"
+    ).repartition(width, "user_id").createOrReplaceTempView(view)
+    return spark.sql(
         f"""
         SELECT * FROM sessionize_events(
             TABLE({view}) PARTITION BY user_id ORDER BY (ts, event_id)
         )
         """
     )
-    # Execute the UDTF with AQE partition coalescing OFF, eagerly, so
-    # the scoped conf governs the run (r17): the PARTITION BY exchange
-    # is REPARTITION_BY_COL, which AQE coalesces BY BYTES — and a
-    # row-at-a-time Python state machine's cost is per ROW, not per
-    # byte, so the small shuffle footprint coalesced the stage to 2-3
-    # partitions and serialized the Python work (measured 2.6 → 1.5 s
-    # at sf0.1 on local[32]). At 100 TB the same exchange is far above
-    # the advisory size and coalescing never shrinks it below the core
-    # count, so the conf is a no-op there — the scope only protects the
-    # case where byte-based sizing misjudges a Python-bound stage.
-    # Same scoped-conf + eager-materialization pattern as the ingest
-    # replays (spread of execution documented there); the session conf
-    # is restored before returning.
-    from ..io.maintenance import session_conf_scope
-
-    with session_conf_scope(
-        spark, "spark.sql.adaptive.coalescePartitions.enabled", "false"
-    ):
-        return out.localCheckpoint(eager=True)

@@ -567,7 +567,6 @@ def stream_ann_ivf_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         centroids,
         os.path.join(root, "store"),
         os.path.join(root, "ckpt"),
-        shuffle_partitions=8,
     )
     vectors_path, ledger_path = ivf_store_paths(os.path.join(root, "store"))
     return _search_appended_ivf(spark, vectors_path, ledger_path)

@@ -755,7 +755,6 @@ def stream_shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(src, "*"),
         os.path.join(root, "store"),
         os.path.join(root, "ckpt"),
-        shuffle_partitions=8,
     )
     return _two_batch_shard_stats(exported)
 

@@ -804,7 +804,6 @@ def stream_ann_ivfpq_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFram
         cb_subs,
         os.path.join(root, "store"),
         os.path.join(root, "ckpt"),
-        shuffle_partitions=8,
     )
     return _search_codes_store(store, emb, cb_subs)
 

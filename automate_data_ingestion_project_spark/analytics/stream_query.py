@@ -344,7 +344,8 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CDC-style ingestion into a KEYED TABLE: readStream →
     ``foreachBatch`` → the engine's transactional upsert sink
-    (:func:`..io.sink.upsert_parquet`), proven by replay with planted
+    (:func:`..streaming.stream_upsert` over
+    :func:`..io.sink.upsert_parquet`), proven by replay with planted
     CORRECTIONS — a later micro-batch re-delivers every 5th event with
     changed values, and the final table must hold last-writer-wins per
     key (the oracle states it exactly).
@@ -361,8 +362,7 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    from ..io.sink import upsert_parquet
-    from ..streaming import KEYED_EVENT_SCHEMA
+    from ..streaming import KEYED_EVENT_SCHEMA, stream_upsert
 
     def _build(tmp: str) -> None:
         src = os.path.join(tmp, "events")
@@ -384,30 +384,14 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _cached_source(spark, sf_dir, "upsert_corrections", _build)
     root = scratch_dir("stream_upsert_fb")
     target = os.path.join(root, "target")
-    ckpt = os.path.join(root, "ckpt")
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_parquet(spark, batch_df, target, keys=["event_id"])
-
-    stream = stream_events(
-        spark, src, schema=KEYED_EVENT_SCHEMA, max_files_per_trigger=1
+    stream_upsert(
+        stream_events(
+            spark, src, schema=KEYED_EVENT_SCHEMA, max_files_per_trigger=1
+        ),
+        target,
+        ["event_id"],
+        os.path.join(root, "ckpt"),
     )
-    # same scoped sizing rationale as run_available_now: the per-batch
-    # upsert's anti-join runs once per micro-batch, and a default-200
-    # session pays 200-task shuffles on kilobyte batches
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_apply)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(conf_key, prior)
     return spark.read.parquet(target)
 
 

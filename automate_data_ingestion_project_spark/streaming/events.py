@@ -20,12 +20,14 @@ result EQUALS the batch computation on the same files.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..io.maintenance import session_conf_scope
 
 EVENT_SCHEMA = "ts timestamp, event_type string, user_id bigint"
 # keyed variant: the delivery key rides along for streaming dedup
@@ -135,6 +137,50 @@ def user_running_totals(events: DataFrame) -> DataFrame:
     )
 
 
+# Shuffle width of every micro-batch drain (and of the batch ingest
+# replays that mirror them). Stateful operators allocate ONE state
+# store per shuffle partition per micro-batch, each with its own
+# checkpoint commit, and AQE cannot coalesce a stateful exchange
+# because the partitioning is frozen into the checkpoint: a default-200
+# session spent ~3x the query's own wall-clock on commits of kilobytes
+# of state. Stateless foreachBatch bodies shuffle batch-sized relations
+# and pay the same per-task overhead. The width never changes a result
+# (keyed state and keyed merges are deterministic per key), only where
+# state lives; a checkpoint that already exists keeps the width
+# recorded in its offset log, which Spark restores on restart.
+DRAIN_SHUFFLE_PARTITIONS = 8
+
+
+def drain_available_now(
+    stream_df: DataFrame,
+    sink: str | Callable[[DataFrame, int], None],
+    output_mode: str = "append",
+    checkpoint_dir: str | None = None,
+) -> None:
+    """Run ``stream_df`` over all available input (Trigger.AvailableNow)
+    and return when the query terminates; an error in a micro-batch
+    raises here. ``sink`` is a ``foreachBatch`` function or the name of
+    a memory table. ``spark.sql.shuffle.partitions`` is pinned to
+    :data:`DRAIN_SHUFFLE_PARTITIONS` for the run and restored after."""
+    writer = stream_df.writeStream.outputMode(output_mode)
+    if callable(sink):
+        writer = writer.foreachBatch(sink)
+    else:
+        writer = writer.format("memory").queryName(sink)
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    with session_conf_scope(
+        stream_df.sparkSession,
+        "spark.sql.shuffle.partitions",
+        DRAIN_SHUFFLE_PARTITIONS,
+    ):
+        q = writer.trigger(availableNow=True).start()
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
+
+
 def stream_upsert(
     events: DataFrame,
     path: str,
@@ -151,13 +197,7 @@ def stream_upsert(
     def merge(batch_df: DataFrame, epoch_id: int) -> None:
         upsert_parquet(batch_df.sparkSession, batch_df, path, keys=keys)
 
-    q = (
-        events.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_available_now(events, merge, checkpoint_dir=checkpoint_dir)
 
 
 def run_available_now(
@@ -165,43 +205,8 @@ def run_available_now(
     query_name: str,
     output_mode: str = "complete",
     checkpoint_dir: str | None = None,
-    shuffle_partitions: int | None = 8,
 ) -> DataFrame:
-    """Replay all available input (Trigger.AvailableNow) into a memory
-    sink and return the result table — the batch-equivalence harness.
-
-    ``shuffle_partitions`` pins ``spark.sql.shuffle.partitions`` for the
-    duration of the run (restored after). Stateful operators allocate
-    ONE state store per shuffle partition per micro-batch, each with its
-    own checkpoint commit, and — unlike batch shuffles — AQE cannot
-    coalesce a stateful exchange because the partitioning is frozen into
-    the checkpoint. Sizing this to the state volume is therefore a real
-    streaming-deployment knob, not a test shortcut: a default-200
-    session spends 200 file-commit round-trips per stateful op per
-    micro-batch on kilobytes of state (measured ~3× the wall-clock of
-    the query itself on the replay harness), while at 100 TB/day the
-    same setting is raised so each store's state fits executor memory.
-    Partitioning never affects the RESULT (hash-partitioned keyed state
-    is deterministic per key), only where state lives. Pass ``None`` to
-    leave the session setting untouched.
-    """
-    spark = stream_df.sparkSession
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    if shuffle_partitions is not None:
-        spark.conf.set(conf_key, str(shuffle_partitions))
-    try:
-        writer = (
-            stream_df.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-        )
-        if checkpoint_dir:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        q = writer.start()
-        q.awaitTermination()
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set(conf_key, prior)
-    return spark.table(query_name)
+    """Replay all available input into a memory sink and return the
+    result table — the batch-equivalence harness."""
+    drain_available_now(stream_df, query_name, output_mode, checkpoint_dir)
+    return stream_df.sparkSession.table(query_name)

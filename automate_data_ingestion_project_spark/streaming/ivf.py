@@ -26,12 +26,11 @@ distinguishes this store from the token-shard exporter's offset chain.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..analytics.ivf import append_ivf_batch, ivf_store_paths
 from ..io.maintenance import read_committed, store_exists
+from .events import drain_available_now, stream_events
 
 VEC_SCHEMA = "vec_id long, embedding array<float>"
 _STORE_SCHEMA = (
@@ -46,8 +45,6 @@ def stream_ivf_ingest(
     centroids: DataFrame,
     root: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Drain all pending embedding files into the IVF store
     (Trigger.AvailableNow) and return the stored vector rows.
@@ -58,17 +55,7 @@ def stream_ivf_ingest(
     epoch's own leaves — vectors indexed by an earlier micro-batch are
     never rewritten, and searches over the growing store keep their
     partition-pruned candidate scans.
-
-    ``shuffle_partitions`` scopes ``spark.sql.shuffle.partitions`` to
-    the drain (restored after) — each micro-batch shuffles a
-    batch-sized relation, the same deployment knob every streaming
-    harness here documents.
     """
-    stream = (
-        spark.readStream.schema(VEC_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
 
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
         # no empty-epoch guard: append_ivf_batch commits an empty epoch
@@ -81,21 +68,13 @@ def stream_ivf_ingest(
             int(epoch_id),
         )
 
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    if shuffle_partitions is not None:
-        spark.conf.set(conf_key, str(shuffle_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set(conf_key, prior)
+    drain_available_now(
+        stream_events(
+            spark, source_dir, schema=VEC_SCHEMA, max_files_per_trigger=1
+        ),
+        ingest,
+        checkpoint_dir=checkpoint_dir,
+    )
     vectors_path, ledger_path = ivf_store_paths(root)
     # existence probe via the Hadoop FileSystem API (os.path.isdir is
     # always false on HDFS/S3A — the filesystems this store targets)
@@ -114,8 +93,6 @@ def stream_ivfpq_ingest(
     codebook_subs: DataFrame,
     root: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """The IVF-PQ form of :func:`stream_ivf_ingest`: drain pending
     embedding files into the codes-only IVF-PQ store
@@ -124,12 +101,6 @@ def stream_ivfpq_ingest(
     independent and a replayed committed epoch is a ledger no-op.
     Returns the stored code rows."""
     from ..analytics.pq import append_ivfpq_batch, ivfpq_store_paths
-
-    stream = (
-        spark.readStream.schema(VEC_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
 
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
         append_ivfpq_batch(
@@ -141,21 +112,13 @@ def stream_ivfpq_ingest(
             int(epoch_id),
         )
 
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    if shuffle_partitions is not None:
-        spark.conf.set(conf_key, str(shuffle_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set(conf_key, prior)
+    drain_available_now(
+        stream_events(
+            spark, source_dir, schema=VEC_SCHEMA, max_files_per_trigger=1
+        ),
+        ingest,
+        checkpoint_dir=checkpoint_dir,
+    )
     codes_path, ledger_path = ivfpq_store_paths(root)
     if not store_exists(spark, codes_path):
         return spark.createDataFrame(

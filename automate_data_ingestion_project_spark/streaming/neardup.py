@@ -21,10 +21,9 @@ of the epoch's own partition directory, so a replay replaces identical
 rows rather than appending contradictory duplicates — together the
 same argument ``stream_upsert`` makes with its keyed merge. One
 micro-batch per input file (``maxFilesPerTrigger=1``) keeps
-cross-batch detection honest in replays; at 100 TB/day the trigger is
-sized by data volume instead, and the index lives in a bucketed table
-(``NearDupIndex.build(bucket_bands=...)``) so the probe join never
-reshuffles it.
+cross-batch detection honest in replays; at 100 TB/day the index lives
+in a bucketed table (``NearDupIndex.build(bucket_bands=...)``) so the
+probe join never reshuffles it.
 """
 
 from __future__ import annotations
@@ -33,7 +32,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..io.maintenance import store_exists
 from ..textops.neardup_index import NearDupIndex
+from .events import drain_available_now, stream_events
 
 DOC_SCHEMA = "doc_id long, text string"
 # decision columns + the epoch partition column the ledger dirs encode
@@ -49,8 +50,6 @@ def stream_neardup_ingest(
     index: NearDupIndex,
     decisions_path: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Drain all pending document files through the ingestion loop
     (Trigger.AvailableNow) and return the decision ledger.
@@ -61,19 +60,7 @@ def stream_neardup_ingest(
     ``decisions_path`` — near-dups of documents accepted in an EARLIER
     micro-batch are rejected, which is the cross-batch property the
     ledger proves.
-
-    ``shuffle_partitions`` scopes ``spark.sql.shuffle.partitions`` to
-    the drain (restored after), the same deployment knob
-    ``run_available_now`` documents: each micro-batch's shingling,
-    signature and verify aggregates still shuffle a batch-sized
-    relation, and default-width exchanges pay task overhead on
-    kilobytes.
     """
-    stream = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
 
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
         if not batch_df.take(1):
@@ -86,23 +73,13 @@ def stream_neardup_ingest(
             os.path.join(decisions_path, f"epoch_id={epoch_id}")
         )
 
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    if shuffle_partitions is not None:
-        spark.conf.set(conf_key, str(shuffle_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set(conf_key, prior)
-    from ..io.maintenance import store_exists
-
+    drain_available_now(
+        stream_events(
+            spark, source_dir, schema=DOC_SCHEMA, max_files_per_trigger=1
+        ),
+        ingest,
+        checkpoint_dir=checkpoint_dir,
+    )
     # Hadoop-FS probe: os.path.isdir is always false on HDFS/S3A
     if not store_exists(spark, decisions_path):
         # nothing pending is a normal state for a continuous loop — an

@@ -19,13 +19,10 @@ no-op, and a retry after a mid-write crash self-heals by wiping only
 the epoch's own ``batch_seq=<epoch>`` leaves before rewriting — files
 from earlier epochs are never candidates. The ledger row is written
 last (the commit marker). One micro-batch per input file
-(``maxFilesPerTrigger=1``) keeps cross-epoch shard filling honest in
-tests; at 100 TB/day the trigger is sized by data volume instead.
+(``maxFilesPerTrigger=1``) keeps cross-epoch shard filling honest.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -34,6 +31,8 @@ from ..analytics.mixing import (
     append_token_shard_batch,
     shard_store_paths,
 )
+from ..io.maintenance import read_committed, store_exists
+from .events import drain_available_now, stream_events
 
 DOC_SCHEMA = "doc_id long, text string"
 _SHARD_SCHEMA = (
@@ -48,8 +47,6 @@ def stream_shard_export(
     root: str,
     checkpoint_dir: str,
     budget: int = SHARD_BUDGET,
-    max_files_per_trigger: int = 1,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Drain all pending document files into the shard store
     (Trigger.AvailableNow) and return the exported shard rows.
@@ -60,18 +57,7 @@ def stream_shard_export(
     new shards — docs exported by an EARLIER micro-batch are never
     rewritten, which is the closed-shard stability property the
     batch-mode tests checksum.
-
-    ``shuffle_partitions`` scopes ``spark.sql.shuffle.partitions`` to
-    the drain (restored after) — each micro-batch shuffles a
-    batch-sized relation, and default-width exchanges pay task
-    overhead on kilobytes (the same knob every streaming harness here
-    documents).
     """
-    stream = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
 
     def export(batch_df: DataFrame, epoch_id: int) -> None:
         # no empty-epoch guard: append_token_shard_batch commits an
@@ -85,24 +71,14 @@ def stream_shard_export(
             budget=budget,
         )
 
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    if shuffle_partitions is not None:
-        spark.conf.set(conf_key, str(shuffle_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(export)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set(conf_key, prior)
+    drain_available_now(
+        stream_events(
+            spark, source_dir, schema=DOC_SCHEMA, max_files_per_trigger=1
+        ),
+        export,
+        checkpoint_dir=checkpoint_dir,
+    )
     shards_path, ledger_path = shard_store_paths(root)
-    from ..io.maintenance import read_committed, store_exists
-
     # Hadoop-FS probe: os.path.isdir is always false on HDFS/S3A
     if not store_exists(spark, shards_path):
         # nothing pending is a normal state for a continuous exporter

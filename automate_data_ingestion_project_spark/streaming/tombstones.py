@@ -66,6 +66,7 @@ from ..io.maintenance import (
     append_tombstones,
     committed_batch_seqs,
 )
+from .events import drain_available_now, stream_events
 
 _EPOCH_SEQ_DIR = "_stream_epoch_seqs"
 
@@ -128,18 +129,12 @@ def stream_tombstone_ingest(
     checkpoint_dir: str,
     id_col: str,
     id_schema: str,
-    max_files_per_trigger: int = 1,
 ) -> None:
     """Drain all pending takedown-id files (Trigger.AvailableNow) into
     the tombstone store, one epoch per file set, each epoch's batch
     sequence allocated at drain time and persisted per-epoch (see
     module docstring for why a fixed base silently dropped erasures).
     ``id_schema`` is the stream schema (e.g. ``"doc_id long"``)."""
-    stream = (
-        spark.readStream.schema(id_schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
 
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
         seq = _allocate_epoch_seq(
@@ -154,10 +149,10 @@ def stream_tombstone_ingest(
             id_col,
         )
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream_events(
+            spark, source_dir, schema=id_schema, max_files_per_trigger=1
+        ),
+        ingest,
+        checkpoint_dir=checkpoint_dir,
     )
-    q.awaitTermination()

@@ -1211,3 +1211,24 @@ def test_bpe_merge_step_is_native_fold_over_cached_vocab(spark, sf_dir):
     assert "ArrowEvalPython" not in plan
     assert "InMemoryTableScan" in plan
     assert "BroadcastExchange" in plan
+
+
+def test_event_sessions_udtf_is_fed_by_one_full_width_exchange(spark, sf_dir):
+    """event_sessions_udtf: ONE hash exchange on user_id at the session's
+    shuffle width feeds BatchEvalPythonUDTF. It is REPARTITION_BY_NUM, so
+    the final adaptive plan reads it uncoalesced (no AQEShuffleRead) with
+    no conf scoped; the UDTF's own PARTITION BY exchange was dropped
+    because the explicit one already satisfies it; and no checkpoint RDD
+    stands in for the plan shape."""
+    df = entrymod.queries()["event_sessions_udtf"](spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    assert "BatchEvalPythonUDTF" in final, plan
+    exchanges = [ln for ln in final.splitlines() if "Exchange " in ln]
+    assert len(exchanges) == 1, plan
+    assert f", {width}), REPARTITION_BY_NUM" in exchanges[0], plan
+    assert "hashpartitioning(user_id#" in exchanges[0], plan
+    assert "AQEShuffleRead" not in final, plan
+    assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, plan

@@ -2,12 +2,13 @@
 every _CHECK_FIRST name must resolve to a registered query (a typo
 silently demotes that query to registration order and wastes the
 round's check slot), the ordered registry must be duplicate-free, and
-the window composition must hold: first the 32 rows whose builder calls
-`functions.dsum` (their sums moved to exact fixed-point limb
-arithmetic after the r17 drive), in registration order, then the first
-18 rows of the previous window's head — store, ingest-replay,
-change-feed and near-dup rows whose commit and decision paths changed
-after the r17 drive."""
+the window composition must hold: first the 16 rows whose code changed
+with the one micro-batch drain (the streaming rows, the near-dup batch
+replays that share its shuffle width, and `event_sessions_udtf`), in
+registration order; then the previous order — the 32 rows whose
+builder calls `functions.dsum`, in registration order, then the
+previous window's store, ingest-replay, change-feed and near-dup head —
+less the rows already placed."""
 
 import inspect
 import re
@@ -15,9 +16,27 @@ import re
 import __spark_entry__ as entrymod
 from automate_data_ingestion_project_spark.analytics import QUERIES
 
+DRAIN_ROWS = {
+    "stream_windowed_counts",
+    "stream_session_counts",
+    "stream_dedup_events",
+    "stream_stateful_totals",
+    "stream_stream_join",
+    "stream_upsert_foreachbatch",
+    "stream_late_data_drop",
+    "stream_neardup_ingest_replay",
+    "stream_shard_export",
+    "stream_shard_store_delete",
+    "stream_ann_ivf_ingest_replay",
+    "stream_ann_ivfpq_ingest_replay",
+    "neardup_ingest_replay",
+    "neardup_compacted_ingest_replay",
+    "neardup_store_delete",
+    "event_sessions_udtf",
+}
+
 PREVIOUS_HEAD = [
-    # the first 18 rows of the previous window; the rest of it (from
-    # neardup_store_delete on, then the r13-vintage rows) leads the next
+    # the store and near-dup head that followed the dsum rows before
     "ann_ivf_ingest_replay",
     "stream_ann_ivf_ingest_replay",
     "ivf_store_compaction",
@@ -58,11 +77,16 @@ def test_ordered_registry_has_no_duplicates_and_covers_everything():
 
 
 def test_driver_window_composition():
-    first50 = list(entrymod.queries())[:50]
+    ordered = list(entrymod.queries())
+    drain_rows = [n for n in QUERIES if n in DRAIN_ROWS]  # registration order
+    assert len(drain_rows) == 16
+    assert ordered[:16] == drain_rows
     dsum_rows = [n for n in QUERIES if _calls_dsum(n)]  # registration order
     assert len(dsum_rows) == 32
-    assert first50[:32] == dsum_rows
-    assert first50[32:] == PREVIOUS_HEAD and len(first50) == 50
+    previous = [n for n in dsum_rows + PREVIOUS_HEAD if n not in DRAIN_ROWS]
+    assert ordered[16 : 16 + len(previous)] == previous
+    assert len(entrymod._CHECK_FIRST) == 16 + len(previous)
+
 
 def test_oracles_cover_every_query():
     q = entrymod.queries()

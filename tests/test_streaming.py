@@ -4,6 +4,7 @@ micro-batches."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -83,45 +84,55 @@ def test_stateful_running_totals_accumulate(spark, events_dir):
     assert {r.user_id: r.total for r in last} == batch
 
 
-def test_stream_upsert_is_idempotent_per_key(spark, events_dir):
-    """foreachBatch keyed upsert: replaying the stream (fresh checkpoint)
-    leaves the table unchanged — the reference's idempotent load, in
-    streaming form."""
-    from automate_data_ingestion_project_spark.streaming import stream_upsert
-
-    # per-user latest aggregate keyed by user_id
-    agg = (
-        stream_events(spark, events_dir)
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n_events"))
+def test_stream_upsert_is_idempotent_per_key(spark, sf_dir, tmp_path):
+    """stream_upsert on an append-mode keyed event stream: a later file
+    re-delivers every 3rd event with a changed payload, and the table
+    must hold last-writer-wins per key, i.e. the batch result. Replaying
+    the whole stream under a fresh checkpoint leaves the table unchanged
+    — the reference's idempotent load, in streaming form. A merge that
+    appended instead of upserting would hold the redelivered keys twice."""
+    from automate_data_ingestion_project_spark.streaming import (
+        KEYED_EVENT_SCHEMA,
+        stream_upsert,
     )
-    root = scratch_dir("test_stream_upsert")
-    path = os.path.join(root, "user_counts")
+
+    cols = ["event_id", "ts", "event_type", "user_id"]
+    ev = load_table(spark, sf_dir, "events").select(*cols)
+    corr = ev.filter(F.col("event_id") % 3 == 0).withColumn(
+        "event_type", F.lit("corrected")
+    )
+    src = tmp_path / "incoming"
+    ev.repartition(2).write.parquet(str(src / "batch1"))
+    corr.coalesce(1).write.parquet(str(src / "batch2"))
+    # corrections are the LATER micro-batch: pin the file-source order
+    t0 = os.stat(src / "batch1").st_mtime
+    for sub, off in (("batch1", 0), ("batch2", 60)):
+        for root, _, files in os.walk(src / sub):
+            for f in files:
+                os.utime(os.path.join(root, f), (t0 + off, t0 + off))
+    path = str(tmp_path / "events_by_id")
 
     def run(tag):
-        # complete-mode aggregate into foreachBatch upsert
-        from automate_data_ingestion_project_spark.io.sink import upsert_parquet
-
-        def merge(batch_df, epoch_id):
-            upsert_parquet(batch_df.sparkSession, batch_df, path, keys=["user_id"])
-
-        q = (
-            agg.writeStream.outputMode("complete")
-            .foreachBatch(merge)
-            .option("checkpointLocation", os.path.join(root, f"ckpt_{tag}"))
-            .trigger(availableNow=True)
-            .start()
+        stream_upsert(
+            stream_events(
+                spark,
+                f"{src}/*",
+                schema=KEYED_EVENT_SCHEMA,
+                max_files_per_trigger=1,
+            ),
+            path,
+            ["event_id"],
+            str(tmp_path / f"ckpt_{tag}"),
         )
-        q.awaitTermination()
-        return sorted(map(tuple, spark.read.parquet(path).collect()))
+        rows = spark.read.parquet(path).select(*cols).collect()
+        return sorted(map(tuple, rows))
 
-    first = run("a")
-    second = run("b")  # full replay with fresh checkpoint
-    assert first == second
-    batch = sorted(
-        map(tuple, _batch_events(spark, events_dir).groupBy("user_id").count().collect())
+    batch = ev.join(corr.select("event_id"), "event_id", "left_anti").unionByName(
+        corr
     )
-    assert first == batch
+    first = run("a")
+    assert first == sorted(map(tuple, batch.select(*cols).collect()))
+    assert run("b") == first  # full replay with a fresh checkpoint
 
 
 def test_watermark_present_in_plan(spark, events_dir):
@@ -129,25 +140,67 @@ def test_watermark_present_in_plan(spark, events_dir):
     assert "EventTimeWatermark" in stream._jdf.queryExecution().analyzed().toString()
 
 
-def test_run_available_now_restores_shuffle_partitions(spark, events_dir):
-    """The scoped state-store sizing must not leak: the session's
-    shuffle-partition setting is restored after the replay (including
-    its effect on subsequent BATCH queries)."""
-    from automate_data_ingestion_project_spark.streaming import (
-        run_available_now,
-        stream_events,
-        windowed_event_counts,
+def test_run_available_now_restores_shuffle_partitions(
+    spark, events_dir, tmp_path
+):
+    """The drain pins its shuffle width without leaking it: a stateful
+    stream drained from a session at another width records
+    DRAIN_SHUFFLE_PARTITIONS in its checkpoint's offset log (the width
+    Spark restores on restart), and the session reads its own value
+    again afterwards."""
+    from automate_data_ingestion_project_spark.streaming.events import (
+        DRAIN_SHUFFLE_PARTITIONS,
     )
 
     key = "spark.sql.shuffle.partitions"
+    ckpt = tmp_path / "ckpt"
     prior = spark.conf.get(key)
-    got = run_available_now(
-        windowed_event_counts(stream_events(spark, events_dir)),
-        "restore_conf_probe",
-        shuffle_partitions=3,
+    spark.conf.set(key, "3")
+    try:
+        got = run_available_now(
+            windowed_event_counts(stream_events(spark, events_dir)),
+            "restore_conf_probe",
+            checkpoint_dir=str(ckpt),
+        )
+        assert got.count() > 0
+        assert spark.conf.get(key) == "3"
+    finally:
+        spark.conf.set(key, prior)
+    # offsets/<batch>: a version line, the batch metadata (with the
+    # session confs the checkpoint pins), then one line per source
+    meta = json.loads((ckpt / "offsets" / "0").read_text().splitlines()[1])
+    assert meta["conf"][key] == str(DRAIN_SHUFFLE_PARTITIONS) == "8"
+
+
+def test_drain_error_raises_restores_width_and_stops_query(
+    spark, events_dir, tmp_path
+):
+    """A foreachBatch body that raises fails the drain: the error
+    surfaces to the caller, the session's own shuffle width is back,
+    and no streaming query is left running."""
+    from pyspark.errors import StreamingQueryException
+
+    from automate_data_ingestion_project_spark.streaming.events import (
+        drain_available_now,
     )
-    assert got.count() > 0
-    assert spark.conf.get(key) == prior
+
+    def fail(batch_df, epoch_id):
+        raise RuntimeError("planted micro-batch failure")
+
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        with pytest.raises(StreamingQueryException, match="planted"):
+            drain_available_now(
+                stream_events(spark, events_dir),
+                fail,
+                checkpoint_dir=str(tmp_path / "ckpt"),
+            )
+        assert spark.conf.get(key) == "3"
+    finally:
+        spark.conf.set(key, prior)
+    assert spark.streams.active == []
 
 
 def test_stream_neardup_ingest_cross_batch_detection(spark, tmp_path):
@@ -286,7 +339,7 @@ def test_stream_shard_export_epochs_fill_and_restart_resumes(spark, tmp_path):
     root = str(tmp_path / "store")
     ckpt = str(tmp_path / "ckpt")
     exported = stream_shard_export(
-        spark, f"{src}/*", root, ckpt, budget=10, shuffle_partitions=2
+        spark, f"{src}/*", root, ckpt, budget=10
     )
     rows = {r.doc_id: (r.shard_id, r.batch_seq) for r in exported.collect()}
     assert set(rows) == {1, 2, 3, 4}
@@ -299,7 +352,7 @@ def test_stream_shard_export_epochs_fill_and_restart_resumes(spark, tmp_path):
     _, ledger_path = shard_store_paths(root)
     n_ledger = spark.read.parquet(ledger_path).count()
     again = stream_shard_export(
-        spark, f"{src}/*", root, ckpt, budget=10, shuffle_partitions=2
+        spark, f"{src}/*", root, ckpt, budget=10
     )
     assert again.count() == 4
     assert spark.read.parquet(ledger_path).count() == n_ledger
@@ -340,7 +393,6 @@ def test_stream_shard_export_empty_epoch_survives(spark, tmp_path):
         root,
         str(tmp_path / "ckpt"),
         budget=10,
-        shuffle_partitions=2,
     )
     rows = {r.doc_id: (int(r.shard_id), r.batch_seq) for r in exported.collect()}
     # the real epoch's docs start at offset 0 — the empty epoch added none
@@ -414,7 +466,7 @@ def test_stream_ivf_ingest_empty_epoch_and_restart(spark, sf_dir, tmp_path):
     root = str(tmp_path / "store")
     ckpt = str(tmp_path / "ckpt")
     stored = stream_ivf_ingest(
-        spark, f"{src}/*", centroids, root, ckpt, shuffle_partitions=2
+        spark, f"{src}/*", centroids, root, ckpt
     )
     assert stored.count() == emb.count()
     assert stored.select("vec_id").distinct().count() == emb.count()
@@ -428,7 +480,7 @@ def test_stream_ivf_ingest_empty_epoch_and_restart(spark, sf_dir, tmp_path):
 
     # restart over the same checkpoint: nothing pending → nothing new
     again = stream_ivf_ingest(
-        spark, f"{src}/*", centroids, root, ckpt, shuffle_partitions=2
+        spark, f"{src}/*", centroids, root, ckpt
     )
     assert again.count() == emb.count()
     assert spark.read.parquet(ledger_path).count() == 3
