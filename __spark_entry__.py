@@ -70,20 +70,57 @@ _SMOKE_SF_DIR = "/root/testdata/sf0.001"
 # set (it checks the first 50 in this ordering; the count rotates
 # round to round). Order the registry so the weakest driver evidence
 # comes first:
-# (1) the 16 rows whose code changed after the dsum rewrite, in
-# registration order: the streaming rows, now run by the one
-# micro-batch drain (`streaming.events.drain_available_now`); the
-# near-dup batch replays, which share its shuffle-width constant; and
-# `event_sessions_udtf`, fed by an explicit-width repartition in place
-# of an eager checkpoint;
-# (2) the previous order: the 32 rows whose builder calls
-# `functions.dsum`, then the store, ingest-replay, change-feed and
-# near-dup rows of the window before, less the rows already in (1).
-# 16 + 34 = 50 fills the window. The rest of (2), from
-# `ivf_store_delete` on, leads the next, then the ivfpq and near-dup
-# graph rows, the quantize family and the r13-vintage rows.
+# (1) the 15 rows whose `functions.dsum` argument changed from a
+# Column to SQL text when `dsum` became one parsed template, in
+# registration order;
+# (2) the 2 SQL-scripting rows, whose Spark SQL now sums through
+# `functions.dsum_sql` instead of Spark's own decimal cast;
+# (3) the other 17 rows whose builder calls `dsum`;
+# (4) the previous order: the 16 rows on the one micro-batch drain
+# (and `event_sessions_udtf`), then the store, ingest-replay,
+# change-feed and near-dup head of the window before.
+# 15 + 2 + 17 + 16 = 50 fills the window. (4)'s store head leads the
+# next, then the ivfpq and near-dup graph rows, the quantize family and
+# the r13-vintage rows.
 _CHECK_FIRST = [
-    # (1) rows on the one micro-batch drain, and event_sessions_udtf
+    # (1) `dsum` arguments that were Columns
+    "pricing_summary",
+    "nation_revenue_share",
+    "promo_revenue_share",
+    "nation_revenue_pareto",
+    "important_revenue_nations",
+    "disjunctive_promo_revenue",
+    "local_supplier_revenue",
+    "shipping_priority_topk",
+    "volume_shipping_pairs",
+    "nation_market_share",
+    "returned_item_losses",
+    "discount_revenue_delta",
+    "top_supplier_revenue",
+    "nation_profit_by_year",
+    "promotable_part_suppliers",
+    # (2) Spark SQL summing through `dsum_sql`
+    "scripted_quality_gate",
+    "pipe_syntax_revenue",
+    # (3) the other `dsum` rows
+    "orders_by_month",
+    "events_weekly_heatmap",
+    "incremental_daily_rollup",
+    "customer_value_quartiles",
+    "skew_salted_join",
+    "events_hypertable_rollup",
+    "revenue_by_nation",
+    "top_brands_by_quantity",
+    "orders_per_year",
+    "sales_rollup",
+    "orders_monthly_gapfill",
+    "sales_cube",
+    "sales_grouping_sets",
+    "events_value_histogram",
+    "small_qty_revenue_by_brand",
+    "big_ticket_orders",
+    "lapsed_customer_balance",
+    # (4) the previous order: rows on the one micro-batch drain ...
     "stream_ann_ivf_ingest_replay",
     "stream_shard_export",
     "stream_shard_store_delete",
@@ -100,40 +137,7 @@ _CHECK_FIRST = [
     "stream_stream_join",
     "stream_upsert_foreachbatch",
     "stream_late_data_drop",
-    # (2) rows that sum through `functions.dsum`
-    "orders_by_month",
-    "events_weekly_heatmap",
-    "incremental_daily_rollup",
-    "customer_value_quartiles",
-    "skew_salted_join",
-    "events_hypertable_rollup",
-    "pricing_summary",
-    "revenue_by_nation",
-    "top_brands_by_quantity",
-    "orders_per_year",
-    "sales_rollup",
-    "orders_monthly_gapfill",
-    "nation_revenue_share",
-    "promo_revenue_share",
-    "nation_revenue_pareto",
-    "sales_cube",
-    "sales_grouping_sets",
-    "events_value_histogram",
-    "small_qty_revenue_by_brand",
-    "important_revenue_nations",
-    "big_ticket_orders",
-    "disjunctive_promo_revenue",
-    "local_supplier_revenue",
-    "shipping_priority_topk",
-    "volume_shipping_pairs",
-    "nation_market_share",
-    "returned_item_losses",
-    "lapsed_customer_balance",
-    "discount_revenue_delta",
-    "top_supplier_revenue",
-    "nation_profit_by_year",
-    "promotable_part_suppliers",
-    # ... then the rest of the previous head (store and near-dup paths)
+    # ... then the store and near-dup head
     "ann_ivf_ingest_replay",
     "ivf_store_compaction",
     "ivf_store_delete",

@@ -25,7 +25,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import dsum as _dsum, dsum_expr as _dsum_expr
+from ..functions import dsum, dsum_expr
 from ..io.sink import read_parquet, upsert_parquet
 from .dv3f import METRICS, _oracle_sql as _dv3f_oracle_sql, normalize_dv3f
 from .registry import register
@@ -161,7 +161,7 @@ def upsert_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
            event_type,
            COUNT(*) AS n_events,
-           {_dsum_expr('value')} AS total_value
+           {dsum_expr('value')} AS total_value
     FROM events
     GROUP BY 1, 2
     """,
@@ -197,7 +197,7 @@ def incremental_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     for batch in (batch1, batch2, batch2):  # 3rd run: idempotent redelivery
         agg = batch.groupBy("day", "event_type").agg(
             F.count("*").alias("n_events"),
-            _dsum("value").alias("total_value"),
+            dsum("value").alias("total_value"),
         )
         upsert_parquet(
             spark, agg, path, keys=["day", "event_type"], partition_by=["day"]

@@ -18,25 +18,30 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions import dsum_expr
+from ..functions import dsum_expr, dsum_sql
 from ..io import load_table
 from .registry import register
 
 _GATE_PREDICATE = "o_totalprice <= 0 OR o_custkey IS NULL OR o_orderdate IS NULL"
 
-_PUBLISH_SQL = f"""
+# the published aggregate over a relation `{rel}`; the sum is `{total}`:
+# `dsum_sql` where Spark runs it, `dsum_expr` in the DuckDB oracle
+_PUBLISH_TEMPLATE = """
     SELECT o_orderpriority AS priority,
            COUNT(*) AS n_orders,
-           {dsum_expr("o_totalprice")} AS total_value,
+           {total} AS total_value,
            0 AS n_violations
     FROM {{rel}}
     GROUP BY o_orderpriority
 """
+_PUBLISH_SQL = _PUBLISH_TEMPLATE.format(total=dsum_sql("o_totalprice"))
 
 
 @register(
     "scripted_quality_gate",
-    oracle=_PUBLISH_SQL.format(rel="orders"),
+    oracle=_PUBLISH_TEMPLATE.format(total=dsum_expr("o_totalprice")).format(
+        rel="orders"
+    ),
     survey_ref="SQL-procedural gate-then-publish (Spark 4 scripting; D/Q engine ext)",
 )
 def scripted_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -110,7 +115,7 @@ def pipe_syntax_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
       |> JOIN pipe_customer AS c ON o.o_custkey = c.c_custkey
       |> JOIN pipe_nation AS n ON c.c_nationkey = n.n_nationkey
       |> JOIN pipe_region AS r ON n.n_regionkey = r.r_regionkey
-      |> AGGREGATE {dsum_expr('o.o_totalprice')} AS revenue,
+      |> AGGREGATE {dsum_sql('o.o_totalprice')} AS revenue,
                    COUNT(*) AS n_orders
          GROUP BY n.n_name AS nation, r.r_name AS region
       |> SELECT nation, region, revenue, n_orders

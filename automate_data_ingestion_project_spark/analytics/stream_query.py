@@ -356,8 +356,8 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     to MERGE semantics — the checkpoint guarantees each batch is
     applied at least once, and the upsert's key-idempotency turns that
     into effectively-once (a replayed batch rewrites the same rows).
-    At 100 TB the sink is a partitioned/Delta table so each batch's
-    merge touches only the partitions it hits (the
+    At 100 TB the sink is a partitioned parquet table, so each batch's
+    upsert rewrites only the partitions it hits (the
     ``incremental_daily_rollup`` path); the loop shape is identical.
     """
     from pyspark.sql import functions as F

@@ -30,6 +30,8 @@ from ..functions import dsum, dsum_expr
 from ..io import load_table
 from .registry import register
 
+DISC_PRICE = "l_extendedprice * (1 - l_discount)"
+
 # ---------------------------------------------------------------------------
 # TPC-H Q1-shaped pricing summary over lineitem (A1-A4 generalized; the
 # shape SURVEY §2.5's aggregations grow into at warehouse scale).
@@ -58,8 +60,6 @@ from .registry import register
 )
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
     n = F.count("*")
     return (
         li.filter(F.col("l_shipdate") <= "2001-06-01")
@@ -67,8 +67,8 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             dsum("l_quantity").alias("sum_qty"),
             dsum("l_extendedprice").alias("sum_base_price"),
-            dsum(disc_price).alias("sum_disc_price"),
-            dsum(charge).alias("sum_charge"),
+            dsum(DISC_PRICE).alias("sum_disc_price"),
+            dsum(f"{DISC_PRICE} * (1 + l_tax)").alias("sum_charge"),
             (dsum("l_quantity") / n).alias("avg_qty"),
             (dsum("l_extendedprice") / n).alias("avg_price"),
             (dsum("l_discount") / n).alias("avg_disc"),

@@ -304,9 +304,7 @@ def nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(nation, cust["c_nationkey"] == nation["n_nationkey"])
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
-            dsum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            ).alias("revenue")
+            dsum("l_extendedprice * (1 - l_discount)").alias("revenue")
         )
     )
     tot = rev.agg(dsum("revenue").alias("total"))
@@ -387,14 +385,15 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type").startswith("PROMO"), rev).otherwise(0.0)
     agg = (
         li.join(part, li["l_partkey"] == part["p_partkey"])
         .groupBy(F.year("l_shipdate").alias("ship_year"))
         .agg(
-            dsum(promo).alias("promo_revenue"),
-            dsum(rev).alias("total_revenue"),
+            dsum(
+                "CASE WHEN startswith(p_type, 'PROMO')"
+                " THEN l_extendedprice * (1 - l_discount) ELSE 0D END"
+            ).alias("promo_revenue"),
+            dsum("l_extendedprice * (1 - l_discount)").alias("total_revenue"),
         )
     )
     return agg.select(
@@ -533,9 +532,7 @@ def nation_revenue_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(nation, cust["c_nationkey"] == nation["n_nationkey"])
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
-            dsum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            ).alias("revenue")
+            dsum("l_extendedprice * (1 - l_discount)").alias("revenue")
         )
     )
     tot = rev.agg(dsum("revenue").alias("total"))

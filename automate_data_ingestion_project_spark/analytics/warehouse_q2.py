@@ -32,10 +32,7 @@ from ..io import load_table
 from .registry import register
 
 REV = "l.l_extendedprice * (1 - l.l_discount)"
-
-
-def _rev():
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
+LI_REV = "l_extendedprice * (1 - l_discount)"  # unqualified, for `dsum`
 
 
 @register(
@@ -91,7 +88,7 @@ def shipping_priority_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderdate").cast("date").alias("order_date"),
             F.col("o_orderpriority").alias("priority"),
         )
-        .agg(dsum(_rev()).alias("revenue"))
+        .agg(dsum(LI_REV).alias("revenue"))
         .select("orderkey", "revenue", "order_date", "priority")
         .orderBy(F.col("revenue").desc(), "orderkey")
         .limit(10)
@@ -177,7 +174,7 @@ def volume_shipping_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cust_region",
             F.year("l_shipdate").alias("l_year"),
         )
-        .agg(F.count("*").alias("n_lines"), dsum(_rev()).alias("revenue"))
+        .agg(F.count("*").alias("n_lines"), dsum(LI_REV).alias("revenue"))
     )
 
 
@@ -243,8 +240,6 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp_nation = nation.select(
         F.col("n_nationkey").alias("supp_nk"), F.col("n_name").alias("supp_nation")
     )
-    rev = _rev()
-    n3 = F.when(F.col("supp_nation") == "NATION_3", rev).otherwise(0.0)
     agg = (
         li.join(part.filter(F.col("p_type") == "PROMO"),
                 F.col("l_partkey") == F.col("p_partkey"))
@@ -255,8 +250,10 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(supp_nation), F.col("s_nationkey") == F.col("supp_nk"))
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
-            dsum(n3).alias("nation_revenue"),
-            dsum(rev).alias("total_revenue"),
+            dsum(
+                f"CASE WHEN supp_nation = 'NATION_3' THEN {LI_REV} ELSE 0D END"
+            ).alias("nation_revenue"),
+            dsum(LI_REV).alias("total_revenue"),
         )
     )
     return agg.select(
@@ -325,7 +322,7 @@ def returned_item_losses(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation"),
             F.col("c_acctbal").alias("acctbal"),
         )
-        .agg(dsum(_rev()).alias("lost_revenue"))
+        .agg(dsum(LI_REV).alias("lost_revenue"))
         .orderBy(F.col("lost_revenue").desc(), "custkey")
         .limit(20)
     )
@@ -428,9 +425,7 @@ def discount_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("n_lines"),
-            dsum(F.col("l_extendedprice") * F.col("l_discount")).alias(
-                "forgone_revenue"
-            ),
+            dsum("l_extendedprice * l_discount").alias("forgone_revenue"),
         )
     )
 
@@ -536,7 +531,7 @@ def top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_shipdate") < "1997-04-01")
         )
         .groupBy(F.col("l_suppkey").alias("suppkey"))
-        .agg(dsum(_rev()).alias("total_revenue"))
+        .agg(dsum(LI_REV).alias("total_revenue"))
     )
     best = sr.agg(F.max("total_revenue").alias("best_revenue"))
     return (

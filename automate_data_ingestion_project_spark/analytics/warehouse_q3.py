@@ -91,7 +91,6 @@ def nation_profit_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate"
     )
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(
             part.filter(F.col("p_name").like("%widget%")),
@@ -104,7 +103,7 @@ def nation_profit_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").cast("int").alias("o_year"),
         )
-        .agg(dsum(rev).alias("profit"))
+        .agg(dsum("l_extendedprice * (1 - l_discount)").alias("profit"))
     )
 
 
@@ -228,7 +227,7 @@ def promotable_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(widget_parts, "l_partkey", "left_semi")
         .groupBy("l_suppkey", "l_partkey")
-        .agg(dsum(F.col("l_quantity")).alias("qty"))
+        .agg(dsum("l_quantity").alias("qty"))
         .filter(F.col("qty") > 50)
     )
     per_supp = heavy.groupBy("l_suppkey").agg(

@@ -34,12 +34,6 @@ from .registry import register
 REV = "l_extendedprice * (1 - l_discount)"
 
 
-def _rev():
-    # built lazily: Column construction needs an active SparkContext,
-    # which doesn't exist at import time
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
-
-
 @register(
     "order_priority_exists",
     oracle="""
@@ -181,7 +175,7 @@ def important_revenue_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cust, F.col("o_custkey") == cust["c_custkey"])
         .join(F.broadcast(nation), F.col("c_nationkey") == nation["n_nationkey"])
         .groupBy(F.col("n_name").alias("nation"))
-        .agg(dsum(_rev()).alias("revenue"))
+        .agg(dsum(REV).alias("revenue"))
     )
     threshold = nr.agg((dsum("revenue") / 20).alias("threshold"))
     return (
@@ -425,7 +419,7 @@ def disjunctive_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(pred)
     return joined.groupBy(F.col("p_brand").alias("brand")).agg(
         F.count("*").alias("n_lines"),
-        dsum(_rev()).alias("revenue"),
+        dsum(REV).alias("revenue"),
     )
 
 
@@ -476,5 +470,5 @@ def local_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_nationkey") == F.col("s_nationkey"))
         .join(F.broadcast(nation), F.col("c_nationkey") == nation["n_nationkey"])
         .groupBy(F.col("n_name").alias("nation"))
-        .agg(F.count("*").alias("n_lines"), dsum(_rev()).alias("revenue"))
+        .agg(F.count("*").alias("n_lines"), dsum(REV).alias("revenue"))
     )

@@ -1745,6 +1745,7 @@ def append_tombstones(
 def compact_bucketed_table(
     spark: SparkSession,
     table: str,
+    path: str,
     bucket_col: str,
     n_buckets: int,
     sort_col: str | None = None,
@@ -1752,28 +1753,26 @@ def compact_bucketed_table(
     tombstone_ledger_path: str | None = None,
     id_col: str | None = None,
 ) -> None:
-    """Small-file compaction for a bucketed catalog table (the near-dup
-    index's band table accumulates one file set per bucket per ingest):
-    rewrite through a staging table with the SAME bucket spec, so the
+    """Small-file compaction for a bucketed catalog table stored at
+    ``path`` (the near-dup index's band table accumulates one file set
+    per bucket per ingest): rewrite it with the SAME bucket spec, so the
     compacted table still joins exchange-free on ``bucket_col``.
 
-    The staging hop exists because Spark refuses to overwrite a table
-    it is reading from. The staging table is then swapped in by a
-    catalog RENAME (r16; it was previously COPIED back with a second
-    bucketed write — the data was written twice for one rewrite):
-    ``ALTER TABLE .. RENAME`` moves the managed table's directory and
-    keeps its bucket spec, so the compacted table still joins
-    exchange-free, for half the write cost. The drop→rename pair is
-    the one non-atomic instant (same exposure the swap-based tree
-    compactions accept at their two renames); a crash between them
-    leaves the full data intact under the staging name — the honest
-    local stand-in for a production deployment's one-metadata-swap
-    (Delta/Iceberg ``REPLACE TABLE`` / ``rewrite_data_files``, the
-    documented seam for every catalog-table mutation in this repo).
+    Spark refuses to overwrite a table it is reading from, so the
+    rewrite goes to a staging table at the sibling directory
+    ``<path>__compact``. Dropping the staging table (an external one)
+    leaves its files, which then replace ``path`` through the same
+    crash-safe directory swap the tree compactions use; the table's
+    catalog entry, location and bucket spec never change, and a crash
+    at any step leaves the full data at ``path`` or the staging
+    directory. The swap is the local stand-in for a production
+    deployment's one-metadata-swap (Delta/Iceberg ``REPLACE TABLE`` /
+    ``rewrite_data_files``).
     """
-    from .sink import write_bucketed_table
+    from .sink import _swap_dir, write_bucketed_table
 
     staging = f"{table}__compact"
+    staging_path = f"{path}__compact"
     spark.sql(f"DROP TABLE IF EXISTS {staging}")
     src = spark.table(table)
     if tombstones_path is not None and store_exists(spark, tombstones_path):
@@ -1783,7 +1782,9 @@ def compact_bucketed_table(
             spark, src, tombstones_path, tombstone_ledger_path, id_col
         )
     write_bucketed_table(
-        src, staging, bucket_col, n_buckets, sort_col=sort_col
+        src, staging, bucket_col, n_buckets, sort_col=sort_col, path=staging_path
     )
-    spark.sql(f"DROP TABLE {table}")
-    spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
+    spark.sql(f"DROP TABLE {staging}")
+    _swap_dir(staging_path, path)
+    spark.catalog.refreshTable(table)
+    invalidate_swapped_path(spark, path)

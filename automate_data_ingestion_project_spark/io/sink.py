@@ -313,16 +313,24 @@ def write_bucketed_table(
     n_buckets: int,
     sort_col: str | None = None,
     mode: str = "overwrite",
+    path: str | None = None,
 ) -> None:
-    """Bucketed managed table — the co-located-join storage layout.
+    """Bucketed catalog table — the co-located-join storage layout.
 
     Two tables bucketed by the same key and count join WITHOUT a
     shuffle exchange (Spark reads bucket i of both sides into the same
     task). At 100 TB this converts the fact⋈fact join from a full
     2-sided shuffle into a local merge — the single biggest join win
     available from layout alone. Sorting within buckets additionally
-    drops the per-task sort of a sort-merge join."""
+    drops the per-task sort of a sort-merge join.
+
+    With ``path`` the table is external and its files live there: a
+    dropped table leaves them, and an overwrite replaces whatever the
+    directory holds. Without it the table is managed, under the
+    session's warehouse directory."""
     writer = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
+    if path is not None:
+        writer = writer.option("path", path)
     if sort_col:
         writer = writer.sortBy(sort_col)
     writer.format("parquet").saveAsTable(table)

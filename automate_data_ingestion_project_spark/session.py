@@ -12,6 +12,13 @@ SparkSession replaces both. Config choices are scale-minded:
 - UTC session timezone so timestamp semantics match the DuckDB oracle
   and are stable across clusters.
 - Arrow enabled for every pandas interchange (Pandas UDFs, toPandas).
+- DataFrame origin capture off (``spark.python.sql.dataFrameDebugging.
+  enabled``). With it on, PySpark walks ``inspect.stack()`` and makes
+  ~5 extra JVM calls around every Column function, so building a
+  dashboard query cost more driver time than running it
+  (``pricing_summary``: 1993 Py4J round trips with it, 533 without).
+  The price: a DataFrame API error no longer names the Python line
+  that built the failing expression. Errors still raise.
 """
 
 from __future__ import annotations
@@ -73,6 +80,7 @@ def get_spark(
         # ANSI off: reference semantics (DuckDB INSERT OR REPLACE pipeline)
         # never raise on overflow/cast; keep permissive NULL-on-error casts.
         .config("spark.sql.ansi.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # Heap: in local mode spark.driver.memory IS the whole JVM (driver,
     # every "executor" thread, and every broadcast build share it), and

@@ -5,7 +5,8 @@ The reference is pure batch (SURVEY.md §2.13: no streams) — its
 "incremental" behavior is the keyed upsert. A complete engine also
 ships the streaming versions of its aggregations:
 
-- file-source ``readStream`` (at scale: Kafka — same DataFrame code);
+- file-source ``readStream`` (any other streaming source feeds the
+  same DataFrame code);
 - event-time windowed counts with a WATERMARK so state for
   late-beyond-bound windows is dropped (bounded state at 100 TB/day);
 - session windows (``session_window`` gap-based grouping);
@@ -93,7 +94,7 @@ def sessionized_counts(
 
 def deduped_events(events: DataFrame, watermark: str = "30 days") -> DataFrame:
     """Streaming exactly-once dedup on ``event_id`` — the ingestion
-    front-door for at-least-once delivery (Kafka redelivery, file
+    front-door for at-least-once delivery (redelivered messages, file
     re-drops): each key is emitted the first time it is seen and
     suppressed afterwards.
 

@@ -13,7 +13,8 @@ This module is that loop:
 - :meth:`NearDupIndex.build` — bootstrap the index from a corpus (one
   shingling + signature pass). Default layout is parquet; with
   ``bucket_bands=n`` the band table is written BUCKETED by
-  ``band_key`` (a managed table via ``io.sink.write_bucketed_table``),
+  ``band_key`` (a catalog table via ``io.sink.write_bucketed_table``
+  whose files live in the index's ``bands`` directory),
   so when a batch is too large to broadcast the probe join reads the
   corpus bands exchange-free — only the batch side shuffles, and the
   100 TB index is never repartitioned (pinned by ``tests/test_plans.py
@@ -147,7 +148,9 @@ def _assert_no_content_collisions(batch_md5: dict, hits: list) -> None:
 def _bands_table_name(root: str) -> str:
     """Catalog name for a root's bucketed band table — content-derived
     from the (already unique, usually PID-scoped) root path so two
-    concurrent engine processes never collide on one catalog entry."""
+    concurrent engine processes never collide on one catalog entry.
+    The table is external, stored in the index's ``bands`` directory,
+    so its files live and die with the index root."""
     return "neardup_bands_" + hashlib.md5(root.encode()).hexdigest()[:12]
 
 
@@ -232,6 +235,7 @@ class NearDupIndex:
                     "band_key",
                     bucket_bands,
                     sort_col="band_key",
+                    path=os.path.join(root, BANDS_SUBDIR),
                 ),
             )
         return cls(spark, root, bucket_bands=bucket_bands)
@@ -619,9 +623,9 @@ class NearDupIndex:
         read logically), and the next compact() simply resumes.
 
         The bucketed variant's band table compacts through
-        :func:`..io.maintenance.compact_bucketed_table` (a staging-table
-        rewrite preserving the bucket spec, so probes stay
-        exchange-free afterwards).
+        :func:`..io.maintenance.compact_bucketed_table` (a staging
+        rewrite preserving the bucket spec, swapped into the ``bands``
+        directory, so probes stay exchange-free afterwards).
 
         Tombstoned documents (:meth:`delete_docs`) are applied
         PHYSICALLY here: every tree's rewrite drops the masked rows and
@@ -660,6 +664,7 @@ class NearDupIndex:
                 compact_bucketed_table(
                     self.spark,
                     self.bands_table,
+                    self.bands_path,
                     "band_key",
                     self.bucket_bands,
                     sort_col="band_key",

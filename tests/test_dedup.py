@@ -565,6 +565,47 @@ def test_bucketed_build_releases_its_persist(spark, tmp_path):
     _assert_build_adds_no_persist(spark, str(tmp_path / "idx"), 4)
 
 
+def test_bucketed_build_over_a_stale_warehouse_directory(spark, tmp_path):
+    """A band-table directory that outlived its catalog entry (an
+    earlier process built an index whose root hashes the same) must not
+    fail the build: the table is stored under the index root, so a
+    stale directory at the warehouse default location is never touched,
+    and the band files go where the index's other trees are."""
+    import os
+
+    from automate_data_ingestion_project_spark.textops.neardup_index import (
+        NearDupIndex,
+        _bands_table_name,
+    )
+
+    root = str(tmp_path / "idx")
+    table = _bands_table_name(root)
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    stale = os.path.join(warehouse, table)
+    os.makedirs(stale, exist_ok=True)
+    with open(os.path.join(stale, "part-00000-stale.snappy.parquet"), "wb") as f:
+        f.write(b"left by an earlier process")
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    corpus = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog today")],
+        "doc_id long, text string",
+    )
+    try:
+        index = NearDupIndex.build(spark, corpus, root, bucket_bands=4)
+        location = {
+            r.col_name: r.data_type
+            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+        }["Location"]
+        assert location.removeprefix("file:") == index.bands_path
+        assert index.bands().count() > 0
+        assert os.listdir(stale) == ["part-00000-stale.snappy.parquet"]
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        for f in os.listdir(stale):
+            os.remove(os.path.join(stale, f))
+        os.rmdir(stale)
+
+
 def test_plain_build_releases_its_persist(spark, tmp_path):
     """The plain layout (also the ``corpus_neardup_index`` artifact
     build, through ``write_corpus``) releases its persist too."""

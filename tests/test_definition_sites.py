@@ -4,7 +4,9 @@ drain_available_now``), and nothing outside the session builder and
 the refcounted ``io.maintenance.session_conf_scope`` sets
 ``spark.sql.shuffle.partitions`` on a live session — a bare get/set/
 restore pair races under concurrent driver threads and leaks its value
-on an error path that skips the restore."""
+on an error path that skips the restore. ``functions.dsum`` has one
+body, the parsed SQL template, and every call passes it SQL text — a
+Column argument would need a second, Column-built body."""
 
 from __future__ import annotations
 
@@ -102,3 +104,66 @@ def test_no_bare_shuffle_width_set_outside_builder_and_scope():
         if key is None or key == SHUFFLE_KEY
     ]
     assert not offenders, offenders
+
+
+def _module_str_constants(tree) -> set[str]:
+    """Module-level names bound to a string literal or an f-string."""
+    return {
+        t.id
+        for n in tree.body
+        if isinstance(n, ast.Assign) and _is_sql_text(n.value, set())
+        for t in n.targets
+        if isinstance(t, ast.Name)
+    }
+
+
+def _is_sql_text(node, constants: set[str]) -> bool:
+    return (
+        (isinstance(node, ast.Constant) and isinstance(node.value, str))
+        or isinstance(node, ast.JoinedStr)
+        or (isinstance(node, ast.Name) and node.id in constants)
+    )
+
+
+def test_every_dsum_call_passes_sql_text():
+    calls, offenders = 0, []
+    for mod, tree in _modules():
+        constants = _module_str_constants(tree)
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ImportFrom) and any(
+                a.name == "dsum" and a.asname for a in n.names
+            ):
+                offenders.append(f"{mod}:{n.lineno}: dsum imported under an alias")
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Name)
+                and n.func.id == "dsum"
+            ):
+                calls += 1
+                if n.keywords or len(n.args) != 1 or not _is_sql_text(
+                    n.args[0], constants
+                ):
+                    offenders.append(f"{mod}:{n.lineno}")
+    assert calls > 0
+    assert not offenders, offenders
+
+
+def test_dsum_has_one_body_the_parsed_template():
+    defs = [
+        (mod, n)
+        for mod, tree in _modules()
+        for n in _functions(tree)
+        if n.name == "dsum"
+    ]
+    assert [mod for mod, _ in defs] == ["functions.py"], defs
+    body = [
+        st
+        for st in defs[0][1].body
+        if not (isinstance(st, ast.Expr) and isinstance(st.value, ast.Constant))
+    ]
+    # return F.expr(dsum_sql(<the argument>))
+    assert len(body) == 1 and isinstance(body[0], ast.Return), ast.dump(body[0])
+    call = body[0].value
+    assert isinstance(call, ast.Call) and ast.unparse(call.func) == "F.expr"
+    assert len(call.args) == 1 and isinstance(call.args[0], ast.Call)
+    assert ast.unparse(call.args[0].func) == "dsum_sql"

@@ -57,6 +57,25 @@ def test_probe_matches_duckdb(spark, x, ansi):
     assert got == _duck_dsum([x]), (x, got)
 
 
+def test_dsum_on_a_column_name_costs_a_few_round_trips(spark, monkeypatch):
+    """`dsum` is one parsed SQL template: building it on a column name
+    makes a handful of Py4J calls, not one per Column operation."""
+    from py4j.clientserver import ClientServerConnection
+
+    dsum("x")  # warm: the first call may resolve JVM classes
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    dsum("x")
+    monkeypatch.undo()
+    assert 0 < len(sent) <= 5, len(sent)
+
+
 def test_null_and_empty_groups_give_null(spark):
     df = spark.createDataFrame([("a", None), ("a", None), ("b", 1.5)], "k string, x double")
     got = {r.k: r.s for r in df.groupBy("k").agg(dsum("x").alias("s")).collect()}

@@ -678,8 +678,6 @@ def test_bucketed_neardup_probe_never_reshuffles_index(spark, sf_dir):
 
     Also re-checks the decision table itself: layout must never change
     results."""
-    import shutil
-
     from automate_data_ingestion_project_spark.textops.dedup import (
         lsh_band_keys,
         minhash_signatures_rows,
@@ -701,10 +699,7 @@ def test_bucketed_neardup_probe_never_reshuffles_index(spark, sf_dir):
         .filter(F.col("doc_id") % 10 == 0)
     )
     root = scratch_dir("neardup_bucketed_plan")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     tbl = _bands_table_name(root)
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    shutil.rmtree(os.path.join(warehouse, tbl), ignore_errors=True)
     index = NearDupIndex.build(spark, docs, root, bucket_bands=8)
     plain = NearDupIndex.build(spark, docs, os.path.join(root, "plain"))
 
@@ -747,9 +742,7 @@ def test_bucketed_neardup_probe_never_reshuffles_index(spark, sf_dir):
         want = sorted(tuple(r) for r in plain.filter_batch(batch).collect())
         assert got == want and len(want) > 0
     finally:
-        # drop INSIDE finally: the table name is PID-derived, so a dir
-        # leaked by an assertion failure could never be reaped by a
-        # later process's DROP IF EXISTS under a different name
+        # the band files live under `root`; this drops the catalog entry
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 

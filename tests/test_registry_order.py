@@ -2,19 +2,41 @@
 every _CHECK_FIRST name must resolve to a registered query (a typo
 silently demotes that query to registration order and wastes the
 round's check slot), the ordered registry must be duplicate-free, and
-the window composition must hold: first the 16 rows whose code changed
-with the one micro-batch drain (the streaming rows, the near-dup batch
-replays that share its shuffle width, and `event_sessions_udtf`), in
-registration order; then the previous order — the 32 rows whose
-builder calls `functions.dsum`, in registration order, then the
-previous window's store, ingest-replay, change-feed and near-dup head —
-less the rows already placed."""
+the window composition must hold: first the 15 rows whose
+`functions.dsum` argument changed from a Column to SQL text, then the
+2 SQL-scripting rows that sum through `functions.dsum_sql`, then the
+other rows whose builder calls `dsum` (all in registration order);
+then the previous order — the 16 rows on the one micro-batch drain
+(the streaming rows, the near-dup batch replays that share its shuffle
+width, and `event_sessions_udtf`), then the store, ingest-replay,
+change-feed and near-dup head of the window before — less the rows
+already placed."""
 
 import inspect
 import re
 
 import __spark_entry__ as entrymod
 from automate_data_ingestion_project_spark.analytics import QUERIES
+
+COLUMN_ARG_ROWS = {
+    "pricing_summary",
+    "nation_revenue_share",
+    "promo_revenue_share",
+    "nation_revenue_pareto",
+    "important_revenue_nations",
+    "disjunctive_promo_revenue",
+    "local_supplier_revenue",
+    "shipping_priority_topk",
+    "volume_shipping_pairs",
+    "nation_market_share",
+    "returned_item_losses",
+    "discount_revenue_delta",
+    "top_supplier_revenue",
+    "nation_profit_by_year",
+    "promotable_part_suppliers",
+}
+
+SCRIPTING_ROWS = {"scripted_quality_gate", "pipe_syntax_revenue"}
 
 DRAIN_ROWS = {
     "stream_windowed_counts",
@@ -36,9 +58,8 @@ DRAIN_ROWS = {
 }
 
 PREVIOUS_HEAD = [
-    # the store and near-dup head that followed the dsum rows before
+    # the store and near-dup head that followed the drain rows before
     "ann_ivf_ingest_replay",
-    "stream_ann_ivf_ingest_replay",
     "ivf_store_compaction",
     "ivf_store_delete",
     "shard_store_ledger_checkpoint",
@@ -48,17 +69,13 @@ PREVIOUS_HEAD = [
     "shard_store_delete",
     "shard_store_asof_erasure",
     "shard_store_changes",
-    "stream_shard_store_delete",
     "cdf_incremental_consumer",
     "cdf_consumer_erasure_propagation",
     "incremental_neardup_filter",
-    "neardup_ingest_replay",
-    "stream_neardup_ingest_replay",
-    "neardup_compacted_ingest_replay",
 ]
 
-# a call of `dsum` (or the `_dsum` import alias), not of `dsum_expr`
-_DSUM_CALL = re.compile(r"\b_?dsum\(")
+# a call of `dsum`, not of `dsum_expr` or `dsum_sql`
+_DSUM_CALL = re.compile(r"\bdsum\(")
 
 
 def _calls_dsum(name: str) -> bool:
@@ -78,14 +95,19 @@ def test_ordered_registry_has_no_duplicates_and_covers_everything():
 
 def test_driver_window_composition():
     ordered = list(entrymod.queries())
-    drain_rows = [n for n in QUERIES if n in DRAIN_ROWS]  # registration order
-    assert len(drain_rows) == 16
-    assert ordered[:16] == drain_rows
     dsum_rows = [n for n in QUERIES if _calls_dsum(n)]  # registration order
     assert len(dsum_rows) == 32
-    previous = [n for n in dsum_rows + PREVIOUS_HEAD if n not in DRAIN_ROWS]
-    assert ordered[16 : 16 + len(previous)] == previous
-    assert len(entrymod._CHECK_FIRST) == 16 + len(previous)
+    assert COLUMN_ARG_ROWS <= set(dsum_rows)
+    head = (
+        [n for n in QUERIES if n in COLUMN_ARG_ROWS]
+        + [n for n in QUERIES if n in SCRIPTING_ROWS]
+        + [n for n in dsum_rows if n not in COLUMN_ARG_ROWS]
+        + [n for n in QUERIES if n in DRAIN_ROWS]
+        + PREVIOUS_HEAD
+    )
+    assert len(head) == len(set(head)) == 15 + 2 + 17 + 16 + 13
+    assert ordered[: len(head)] == head
+    assert len(entrymod._CHECK_FIRST) == len(head)
 
 
 def test_oracles_cover_every_query():
