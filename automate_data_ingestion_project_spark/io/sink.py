@@ -151,8 +151,9 @@ def upsert_parquet(
     if target_schema is not None:
         src = align_to_schema(src, target_schema)
 
-    dynamic = bool(partition_by) and path_exists(path)
-    if path_exists(path):
+    exists = path_exists(path)
+    dynamic = bool(partition_by) and exists
+    if exists:
         target = spark.read.parquet(path)
         if target_schema is None:
             # align source to the existing table by name; keep target cols
@@ -206,10 +207,19 @@ def upsert_parquet(
                 .select(*partition_by)
                 .withColumn("_f", F.input_file_name())
             ).select("_f").distinct()
-        keep = target.join(src.select(*keys), on=keys, how="left_anti")
-        merged = keep.unionByName(src, allowMissingColumns=True)
     else:
-        merged = src
+        # An absent table merges as an empty one (CREATE TABLE IF NOT
+        # EXISTS, then INSERT OR REPLACE): a scan of an empty directory
+        # under the batch's schema. A table's first upsert then runs the
+        # same plan as every later one, so the merge's code generation
+        # is paid on the first run of a scheduled pipeline, not the
+        # second, and no first-write branch differs from the rest.
+        os.makedirs(path, exist_ok=True)
+        target = spark.read.schema(
+            T.StructType([T.StructField(f.name, f.dataType) for f in src.schema])
+        ).parquet(path)
+    keep = target.join(src.select(*keys), on=keys, how="left_anti")
+    merged = keep.unionByName(src, allowMissingColumns=True)
 
     # Write-then-swap: the merged plan reads `path`, so the new data
     # lands in a sibling tmp dir first; the swap is rename-only.
